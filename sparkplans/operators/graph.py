@@ -15,7 +15,7 @@ join reuses the same partitioning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
-from sparkplans.materialize import materialize, materialize_lazy, release
+from sparkplans.materialize import materialize, materialize_lazy, observed, release
 
 # Last pagerank() run decomposition (diagnostics for scale harnesses,
 # same pattern as dedup.last_auto_decision): which path ran
@@ -222,9 +222,7 @@ def pagerank(
         ),
         preserve_partitioning=True,
     )
-    from sparkplans.materialize import observed as _observed_tuple
-
-    cnt_vals = _observed_tuple(cnt_obs, ["n", "nd"])
+    cnt_vals = observed(cnt_obs, ["n", "nd"])
     if cnt_vals is None:
         row = nodes_deg.agg(
             F.count("*").alias("n"),
@@ -353,7 +351,8 @@ def pagerank(
                     ).alias("dm"),
                 )
             )
-            dm = _observed(obs, "dm")
+            vals = observed(obs, ["dm"])
+            dm = None if vals is None else float(vals[0])
             if dm is None:
                 # a checkpoint route whose materialization action
                 # doesn't fire the observation listener: fall back to
@@ -385,16 +384,6 @@ def pagerank(
     release(e_deg)
     release(nodes_deg)
     return ranks.select("node", "rank")
-
-
-def _observed(obs: Observation, key: str, timeout_s: float = 5.0):
-    """Single-metric float wrapper over :func:`materialize.observed`
-    (poll-with-timeout; None means fall back to an explicit
-    aggregate)."""
-    from sparkplans.materialize import observed
-
-    vals = observed(obs, [key], timeout_s=timeout_s)
-    return None if vals is None else float(vals[0])
 
 
 def label_propagation(

@@ -2,10 +2,12 @@
 
 Media are opaque ``binary`` columns with typed metadata; compute-heavy
 per-item work (decode, resize, feature extraction, frame sampling)
-runs as Arrow-batched pandas iterators via ``mapInPandas`` — the
-Spark-idiomatic shape for Python-side media processing: each task
-pulls record batches, processes locally, emits batches; no driver
-involvement, scales with partitions.
+runs through one stage, :func:`_per_clip`: Arrow-batched
+``mapInPandas`` over the filtered rows, calling a per-clip function on
+each payload — the Spark-idiomatic shape for Python-side media
+processing: each task pulls record batches, processes locally, emits
+batches; no driver involvement, scales with partitions.  Every public
+stage is a row filter, an output schema and a per-clip function.
 
 Codec reality map: ALL THREE modalities have fully real branches with
 no external library —
@@ -27,8 +29,9 @@ The DEFAULT API names (`extract_image_features`, `resize_images`,
 `sample_video_frames`, `resample_audio`) all run these real codecs —
 payloads are sniffed by magic bytes and dispatched to the matching
 decoder; unknown formats raise ``ValueError``, the honest boundary of
-a container with no external codec libraries.  The ``*_real`` names
-remain as compatibility aliases.  Compressed bitstreams that would
+a container with no external codec libraries.  The format-specific
+names (`decode_ppm_features`, `resize_png_images`, ...) run the same
+per-clip functions behind a mime filter.  Compressed bitstreams that would
 need external libraries (MP3/OGG frames, H.264/MP4 video) get REAL
 container-level metadata probes instead (`extract_media_metadata` /
 operators/mediaprobe: MP4 box walk, MP3 frame headers), because
@@ -44,7 +47,7 @@ three are the formats where a correct clean-room decoder is a
 multi-thousand-line DSP/entropy-coding project (MDCT + Huffman for
 MP3, CABAC for H.264) that no data-pipeline team would hand-roll —
 the production answer is a library (ffmpeg/libsndfile) slotted into
-the SAME mapInPandas stage, a one-line swap this module's structure
+the SAME per-clip stage, a one-line swap this module's structure
 already accommodates; (c) every curation gate the registered queries
 need from these formats (duration, codec id, bitrate, channel
 layout) is served losslessly by the container probes, which ARE
@@ -58,7 +61,6 @@ list.
 
 from __future__ import annotations
 
-import hashlib
 from typing import Iterator
 
 import pandas as pd
@@ -87,139 +89,26 @@ MEDIA_SCHEMA = StructType(
     ]
 )
 
-def extract_image_features(media: DataFrame) -> DataFrame:
-    """Decode + featurize image payloads via mapInPandas (Arrow
-    batches), REAL end-to-end: each payload is sniffed by magic bytes
-    and decoded with the matching pure-python codec
-    (:func:`decode_image` — PNG/PPM/BMP/JPEG/GIF), emitting actual
-    width/height and per-channel pixel means.  Partition-parallel; the
-    UDF sees pandas DataFrames and never crosses the driver."""
-    return extract_image_features_real(media)
 
-
-def extract_image_features_arrow(media: DataFrame) -> DataFrame:
-    """`mapInArrow` twin of :func:`extract_image_features`: the UDF
-    consumes raw ``pyarrow.RecordBatch``es with NO pandas conversion.
-    For wide binary payloads this is the cheaper path at scale —
-    pandas materializes every payload as a Python ``bytes`` object per
-    row (copy + boxing), while Arrow keeps the batch in one
-    contiguous buffer until the kernel actually reads a value.
-    Same real decode kernel (:func:`decode_image`), bit-identical
-    output to the pandas twin; tests assert equality."""
-    import pyarrow as pa
-
-    def batches(it: Iterator["pa.RecordBatch"]) -> Iterator["pa.RecordBatch"]:
-        for rb in it:
-            ids = rb.column(rb.schema.get_field_index("media_id"))
-            arrs = [
-                decode_image(b)
-                for b in rb.column(rb.schema.get_field_index("payload")).to_pylist()
-            ]
-            yield pa.RecordBatch.from_arrays(
-                [
-                    ids,
-                    pa.array([a.shape[1] for a in arrs], pa.int32()),
-                    pa.array([a.shape[0] for a in arrs], pa.int32()),
-                    pa.array(
-                        [[float(m) for m in a.mean(axis=(0, 1))] for a in arrs],
-                        pa.list_(pa.float64()),
-                    ),
-                ],
-                names=["media_id", "width", "height", "channel_means"],
-            )
-
-    return media.filter(F.col("kind") == "image").mapInArrow(
-        batches, PPM_FEATURES_SCHEMA
-    )
-
-
-def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """REAL frame sampling over video payloads, format-sniffed per
-    row: Y4M/YUV4MPEG2 decodes with the pure-numpy codec; animated GIF
-    composites frames over the stream's own delay timeline.  One
-    output row per every_ms tick with the active frame's actual luma
-    statistics (same schema as :func:`sample_y4m_frames`)."""
-    import numpy as np
-
-    def frame_rows(media_id, payload: bytes, rows: list) -> None:
-        b = bytes(payload)
-        if b.startswith(b"YUV4MPEG2"):
-            frames, fps = decode_y4m(b)
-            n = frames.shape[0]
-            if n == 0:
-                return
-            dur_ms = n / fps * 1000
-            t = 0.0
-            while t < dur_ms:
-                idx = min(int(round(t / 1000 * fps)), n - 1)
-                y = frames[idx, :, :, 0].astype("float64")
-                rows.append(
-                    (media_id, idx, int(t), float(y.mean()), float(y.std()))
-                )
-                t += every_ms
-            return
-        if b.startswith(b"GIF8"):
-            from sparkplans.operators.gif import decode_gif
-
-            frames, delays = decode_gif(b)
-            total = sum(delays)
-            starts = np.cumsum([0] + delays[:-1])
-            t = 0
-            while t < total:
-                idx = int(np.searchsorted(starts, t, side="right") - 1)
-                y = (
-                    0.299 * frames[idx, :, :, 0]
-                    + 0.587 * frames[idx, :, :, 1]
-                    + 0.114 * frames[idx, :, :, 2]
-                ).astype("float64")
-                rows.append(
-                    (media_id, idx, int(t), float(y.mean()), float(y.std()))
-                )
-                t += every_ms
-            return
-        raise ValueError(
-            "unsupported video format (Y4M / animated GIF decodable here)"
-        )
+def _per_clip(media: DataFrame, where, schema: StructType, fn) -> DataFrame:
+    """The module's one Python stage: keep the ``where`` rows of
+    ``media``, then, inside Arrow-batched ``mapInPandas``, call
+    ``fn(payload)`` once per clip.  Every tuple ``fn`` yields becomes
+    one output row with the clip's ``media_id`` prepended, under the
+    column names ``schema`` declares.  Partition-parallel; payloads
+    never cross the driver."""
+    names = schema.fieldNames()
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            rows: list = []
-            for _, r in pdf.iterrows():
-                frame_rows(r["media_id"], r["payload"], rows)
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "t_ms", "luma_mean", "luma_std"],
-            )
+            rows = [
+                (media_id, *out)
+                for media_id, payload in zip(pdf["media_id"], pdf["payload"])
+                for out in fn(payload)
+            ]
+            yield pd.DataFrame(rows, columns=names)
 
-    return media.filter(F.col("kind") == "video").mapInPandas(
-        batches, Y4M_FRAME_SCHEMA
-    )
-
-
-RESIZED_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType()),
-        StructField("width", IntegerType()),
-        StructField("height", IntegerType()),
-        StructField("payload", BinaryType()),
-    ]
-)
-
-
-def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
-    """REAL format-generic resize: sniff + decode with the matching
-    codec, nearest-neighbor resample, re-encode in the SAME format
-    (PPM/PNG/BMP lossless; JPEG at q=85).  Delegates to
-    :func:`resize_images_real` (kept as a compatibility alias)."""
-    return resize_images_real(media, width=width, height=height)
-
-
-def resample_audio(media: DataFrame, target_hz: int = 16000) -> DataFrame:
-    """REAL audio resample: decode WAV PCM16, linear-interpolate to
-    ``target_hz``, re-encode — actual waveforms, not digests.
-    Delegates to :func:`resample_wav_audio` (kept as a compatibility
-    alias)."""
-    return resample_wav_audio(media, target_hz=target_hz)
+    return media.filter(where).mapInPandas(batches, schema)
 
 
 def synthetic_media(spark, n: int = 64) -> DataFrame:
@@ -281,9 +170,8 @@ def synthetic_media(spark, n: int = 64) -> DataFrame:
 # PPM needs no external codec library, so this branch of the multimodal
 # surface is fully real end-to-end: binary payloads decode to pixel
 # arrays, resize is actual nearest-neighbor resampling, and features
-# are computed from real pixels — same mapInPandas plumbing the
-# stubbed PNG/WAV/MP4 paths use, proving the pattern with bytes the
-# tests can verify numerically.
+# are computed from real pixels, with bytes the tests can verify
+# numerically.
 
 PPM_FEATURES_SCHEMA = StructType(
     [
@@ -291,6 +179,16 @@ PPM_FEATURES_SCHEMA = StructType(
         StructField("width", IntegerType()),
         StructField("height", IntegerType()),
         StructField("channel_means", ArrayType(DoubleType())),
+    ]
+)
+
+
+RESIZED_SCHEMA = StructType(
+    [
+        StructField("media_id", LongType()),
+        StructField("width", IntegerType()),
+        StructField("height", IntegerType()),
+        StructField("payload", BinaryType()),
     ]
 )
 
@@ -333,56 +231,15 @@ def decode_ppm(payload: bytes):
 
 
 def decode_ppm_features(media: DataFrame) -> DataFrame:
-    """REAL decode + featurize for image/x-portable-pixmap payloads:
-    per-channel pixel means from the actual decoded array, via the
-    same Arrow-batched mapInPandas flow as the stubbed codecs."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            arrs = pdf["payload"].map(decode_ppm)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": arrs.map(lambda a: a.shape[1]).astype("int32"),
-                    "height": arrs.map(lambda a: a.shape[0]).astype("int32"),
-                    "channel_means": arrs.map(
-                        lambda a: [float(m) for m in a.mean(axis=(0, 1))]
-                    ),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/x-portable-pixmap").mapInPandas(
-        batches, PPM_FEATURES_SCHEMA
-    )
+    """:func:`extract_image_features` for image/x-portable-pixmap rows."""
+    return _per_clip(media, F.col("mime") == "image/x-portable-pixmap",
+                     PPM_FEATURES_SCHEMA, _image_features)
 
 
 def resize_ppm_images(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
-    """REAL nearest-neighbor resize for PPM payloads: decode, resample
-    with integer index striding, re-encode — the actual pixel
-    transform, not a digest stand-in."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def rz(b: bytes) -> bytes:
-                a = decode_ppm(b)
-                h, w = a.shape[:2]
-                yi = np.minimum((np.arange(height) * h) // height, h - 1)
-                xi = np.minimum((np.arange(width) * w) // width, w - 1)
-                return encode_ppm(a[yi][:, xi])
-
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(rz),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/x-portable-pixmap").mapInPandas(
-        batches, RESIZED_SCHEMA
-    )
+    """:func:`resize_images` for image/x-portable-pixmap rows."""
+    return _per_clip(media, F.col("mime") == "image/x-portable-pixmap",
+                     RESIZED_SCHEMA, lambda p: _resize(p, width, height))
 
 
 # ---------------------------------------------------------------------
@@ -392,9 +249,8 @@ def resize_ppm_images(media: DataFrame, width: int = 8, height: int = 8) -> Data
 # framing, IDAT is zlib (stdlib), and scanline unfiltering (None /
 # Sub / Up / Average / Paeth) is numpy row arithmetic.  This upgrades
 # the round-1 PNG stub to a fully real branch —
-# encode, decode, featurize, resize — through the identical
-# mapInPandas plumbing.  8-bit RGB/RGBA, non-interlaced (the common
-# case for generated/training imagery); anything else raises.
+# encode, decode, featurize, resize.  8-bit gray/RGB/RGBA with or
+# without Adam7 interlace; anything else raises.
 
 _PNG_SIG = b"\x89PNG\r\n\x1a\n"
 
@@ -606,55 +462,15 @@ def _png_unfilter_subimage(data: bytes, offset: int, h: int, w: int, c: int):
 
 
 def decode_png_features(media: DataFrame) -> DataFrame:
-    """REAL decode + featurize for image/png payloads: per-channel
-    pixel means from the actual decoded array — the PPM branch's twin,
-    same Arrow-batched mapInPandas flow, no PIL anywhere."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            arrs = pdf["payload"].map(decode_png)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": arrs.map(lambda a: a.shape[1]).astype("int32"),
-                    "height": arrs.map(lambda a: a.shape[0]).astype("int32"),
-                    "channel_means": arrs.map(
-                        lambda a: [float(m) for m in a.mean(axis=(0, 1))]
-                    ),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/png").mapInPandas(
-        batches, PPM_FEATURES_SCHEMA
-    )
+    """:func:`extract_image_features` for image/png rows."""
+    return _per_clip(media, F.col("mime") == "image/png",
+                     PPM_FEATURES_SCHEMA, _image_features)
 
 
 def resize_png_images(media: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
-    """REAL nearest-neighbor resize for PNG payloads: decode,
-    integer-stride resample, re-encode — actual pixels, not digests."""
-    import numpy as np
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            def rz(b: bytes) -> bytes:
-                a = decode_png(b)
-                h, w = a.shape[:2]
-                yi = np.minimum((np.arange(height) * h) // height, h - 1)
-                xi = np.minimum((np.arange(width) * w) // width, w - 1)
-                return encode_png(a[yi][:, xi])
-
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(rz),
-                }
-            )
-
-    return media.filter(F.col("mime") == "image/png").mapInPandas(
-        batches, RESIZED_SCHEMA
-    )
+    """:func:`resize_images` for image/png rows."""
+    return _per_clip(media, F.col("mime") == "image/png",
+                     RESIZED_SCHEMA, lambda p: _resize(p, width, height))
 
 
 def synthetic_png_media(spark, n: int = 16) -> DataFrame:
@@ -687,7 +503,7 @@ def synthetic_png_media(spark, n: int = 16) -> DataFrame:
 # (numpy frombuffer).  This upgrades the round-1 audio stub to a fully
 # real branch — decode, resample (linear interpolation), feature
 # extraction (RMS / zero-crossing rate / spectral centroid over a real
-# numpy FFT) — through the identical mapInPandas plumbing.
+# numpy FFT).
 
 WAV_FEATURES_SCHEMA = StructType(
     [
@@ -863,27 +679,9 @@ def wav_feature_row(payload: bytes) -> tuple:
 
 
 def decode_wav_features(media: DataFrame) -> DataFrame:
-    """REAL decode + featurize for audio/wav payloads — the PNG/PPM
-    branches' audio twin, same Arrow-batched mapInPandas flow."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = pdf["payload"].map(wav_feature_row)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": feats.map(lambda t: t[0]).astype("int32"),
-                    "n_samples": feats.map(lambda t: t[1]).astype("int64"),
-                    "n_channels": feats.map(lambda t: t[2]).astype("int32"),
-                    "rms": feats.map(lambda t: t[3]),
-                    "zero_crossing_rate": feats.map(lambda t: t[4]),
-                    "spectral_centroid_hz": feats.map(lambda t: t[5]),
-                }
-            )
-
-    return media.filter(F.col("mime") == "audio/wav").mapInPandas(
-        batches, WAV_FEATURES_SCHEMA
-    )
+    """REAL decode + featurize (:func:`wav_feature_row`) of audio/wav rows."""
+    return _per_clip(media, F.col("mime") == "audio/wav",
+                     WAV_FEATURES_SCHEMA, lambda p: [wav_feature_row(p)])
 
 
 def resample_wav(payload: bytes, target_hz: int):
@@ -906,25 +704,16 @@ def resample_wav(payload: bytes, target_hz: int):
     return encode_wav(np.clip(np.round(out), -32768, 32767).astype("<i2"), target_hz)
 
 
-def resample_wav_audio(media: DataFrame, target_hz: int = 16000) -> DataFrame:
+def resample_audio(media: DataFrame, target_hz: int = 16000) -> DataFrame:
     """REAL audio resample for audio/wav payloads: decode, linear-interp
-    to target_hz, re-encode — actual waveforms, not digests."""
+    to ``target_hz``, re-encode — actual waveforms, not digests."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = pdf["payload"].map(lambda b: resample_wav(bytes(b), target_hz))
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "sample_rate": target_hz,
-                    "n_samples": out.map(lambda b: decode_wav(b)[0].shape[0]).astype("int64"),
-                    "payload": out,
-                }
-            )
+    def resampled(payload):
+        out = resample_wav(bytes(payload), target_hz)
+        yield target_hz, decode_wav(out)[0].shape[0], out
 
-    return media.filter(F.col("mime") == "audio/wav").mapInPandas(
-        batches, WAV_RESAMPLE_SCHEMA
-    )
+    return _per_clip(media, F.col("mime") == "audio/wav",
+                     WAV_RESAMPLE_SCHEMA, resampled)
 
 
 def synthetic_wav_media(spark, n: int = 12) -> DataFrame:
@@ -978,10 +767,9 @@ def synthetic_ppm_media(spark, n: int = 16) -> DataFrame:
 # 24-bit uncompressed BMP is a 14-byte file header + 40-byte
 # BITMAPINFOHEADER + bottom-up BGR rows padded to 4 bytes — all
 # struct/numpy.  With PNG, PPM and BMP real, `decode_image` sniffs the
-# payload magic and dispatches, so the *generic* image path
-# (extract_image_features_real) is fully real for every format this
-# container can legally decode; only formats that genuinely require
-# external codecs (JPEG etc.) still raise.
+# payload magic and dispatches (JPEG and GIF live in operators/jpeg
+# and operators/gif), so `extract_image_features` and `resize_images`
+# are fully real for every image format this module decodes.
 
 
 def encode_bmp(arr) -> bytes:
@@ -1055,29 +843,52 @@ def decode_image(payload: bytes):
     )
 
 
-def extract_image_features_real(media: DataFrame) -> DataFrame:
-    """The generic image-features path, REAL end-to-end: sniff + decode
-    each payload with decode_image and emit actual pixel statistics
-    (width/height + per-channel means) — format-agnostic across every
-    codec this module implements."""
+def _image_features(payload):
+    """(width, height, per-channel means) of the decoded image."""
+    a = decode_image(payload)
+    yield a.shape[1], a.shape[0], [float(m) for m in a.mean(axis=(0, 1))]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            arrs = pdf["payload"].map(decode_image)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": arrs.map(lambda a: a.shape[1]).astype("int32"),
-                    "height": arrs.map(lambda a: a.shape[0]).astype("int32"),
-                    "channel_means": arrs.map(
-                        lambda a: [float(m) for m in a.mean(axis=(0, 1))]
-                    ),
-                }
-            )
 
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, PPM_FEATURES_SCHEMA
-    )
+def extract_image_features(media: DataFrame) -> DataFrame:
+    """Decode + featurize every image payload, REAL end-to-end: each
+    payload is sniffed by magic bytes and decoded with the matching
+    codec (:func:`decode_image` — PNG/PPM/BMP/JPEG/GIF), emitting
+    actual width/height and per-channel pixel means."""
+    return _per_clip(media, F.col("kind") == "image",
+                     PPM_FEATURES_SCHEMA, _image_features)
+
+
+def _resize(payload, width: int, height: int):
+    """(width, height, payload) of the nearest-neighbor resample,
+    re-encoded in the source format (PPM/PNG/BMP lossless; anything
+    else as JPEG at q=85)."""
+    import numpy as np
+
+    a = decode_image(payload)
+    h, w = a.shape[:2]
+    yi = np.minimum((np.arange(height) * h) // height, h - 1)
+    xi = np.minimum((np.arange(width) * w) // width, w - 1)
+    out = a[yi][:, xi]
+    raw = bytes(payload)
+    if raw.startswith(_PNG_SIG):
+        enc = encode_png(out)
+    elif raw.startswith(b"P6"):
+        enc = encode_ppm(out)
+    elif raw.startswith(b"BM"):
+        enc = encode_bmp(out)
+    else:
+        from sparkplans.operators.jpeg import encode_jpeg
+
+        enc = encode_jpeg(out[:, :, :3], quality=85)
+    yield width, height, enc
+
+
+def resize_images(media: DataFrame, width: int = 64, height: int = 64) -> DataFrame:
+    """REAL format-generic resize: sniff + decode with the matching
+    codec, nearest-neighbor resample, re-encode in the SAME format
+    (PPM/PNG/BMP lossless; JPEG at q=85)."""
+    return _per_clip(media, F.col("kind") == "image",
+                     RESIZED_SCHEMA, lambda p: _resize(p, width, height))
 
 
 # ---------------------------------------------------------------------
@@ -1088,7 +899,7 @@ def extract_image_features_real(media: DataFrame) -> DataFrame:
 # `FRAME\n` + raw planar YUV per frame.  No external codec needed, so
 # the round-1 video stub (digest fakes) gains a fully real branch:
 # decode, timestamp-accurate frame sampling, per-frame luma features,
-# and scene-cut detection — all real pixels, same mapInPandas flow.
+# and scene-cut detection — all real pixels.
 
 Y4M_FRAME_SCHEMA = StructType(
     [
@@ -1163,37 +974,69 @@ def decode_y4m(payload: bytes):
     return np.stack(frames) if frames else np.zeros((0, h, w, 3), "uint8"), fps_num / fps_den
 
 
+def _y4m_samples(payload, every_ms: int):
+    """(frame_idx, t_ms, luma_mean, luma_std) of the Y4M frame nearest
+    each ``every_ms`` tick."""
+    frames, fps = decode_y4m(bytes(payload))
+    n = frames.shape[0]
+    if n == 0:
+        return
+    dur_ms = n / fps * 1000
+    t = 0.0
+    while t < dur_ms:
+        idx = min(int(round(t / 1000 * fps)), n - 1)
+        y = frames[idx, :, :, 0].astype("float64")
+        yield idx, int(t), float(y.mean()), float(y.std())
+        t += every_ms
+
+
+def _gif_samples(payload, every_ms: int):
+    """(frame_idx, t_ms, luma_mean, luma_std) of the GIF frame active
+    at each ``every_ms`` tick of the stream's own delay timeline."""
+    import numpy as np
+
+    from sparkplans.operators.gif import decode_gif
+
+    frames, delays = decode_gif(bytes(payload))
+    total = sum(delays)
+    starts = np.cumsum([0] + delays[:-1])
+    t = 0
+    while t < total:
+        idx = int(np.searchsorted(starts, t, side="right") - 1)
+        y = (
+            0.299 * frames[idx, :, :, 0]
+            + 0.587 * frames[idx, :, :, 1]
+            + 0.114 * frames[idx, :, :, 2]
+        )
+        yield idx, int(t), float(y.mean()), float(y.std())
+        t += every_ms
+
+
 def sample_y4m_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
     """REAL frame sampling for video/x-yuv4mpeg payloads: decode, pick
     the frame nearest each every_ms timestamp, emit actual luma
-    statistics.  One output row per sampled frame — the video twin of
-    the image/audio real branches."""
-    import numpy as np
+    statistics.  One output row per sampled frame."""
+    return _per_clip(media, F.col("mime") == "video/x-yuv4mpeg",
+                     Y4M_FRAME_SCHEMA, lambda p: _y4m_samples(p, every_ms))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, fps = decode_y4m(bytes(r["payload"]))
-                n = frames.shape[0]
-                if n == 0:
-                    continue
-                dur_ms = n / fps * 1000
-                t = 0.0
-                while t < dur_ms:
-                    idx = min(int(round(t / 1000 * fps)), n - 1)
-                    y = frames[idx, :, :, 0].astype("float64")
-                    rows.append(
-                        (r["media_id"], idx, int(t), float(y.mean()), float(y.std()))
-                    )
-                    t += every_ms
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "t_ms", "luma_mean", "luma_std"]
-            )
 
-    return media.filter(F.col("mime") == "video/x-yuv4mpeg").mapInPandas(
-        batches, Y4M_FRAME_SCHEMA
-    )
+def sample_video_frames(media: DataFrame, every_ms: int = 1000) -> DataFrame:
+    """REAL frame sampling over video payloads, format-sniffed per
+    row: Y4M/YUV4MPEG2 decodes with the pure-numpy codec; animated GIF
+    composites frames over the stream's own delay timeline.  Same
+    rows and schema as :func:`sample_y4m_frames`."""
+
+    def samples(payload):
+        b = bytes(payload)
+        if b.startswith(b"YUV4MPEG2"):
+            return _y4m_samples(b, every_ms)
+        if b.startswith(b"GIF8"):
+            return _gif_samples(b, every_ms)
+        raise ValueError(
+            "unsupported video format (Y4M / animated GIF decodable here)"
+        )
+
+    return _per_clip(media, F.col("kind") == "video", Y4M_FRAME_SCHEMA, samples)
 
 
 def detect_scene_cuts(media: DataFrame, threshold: float = 30.0) -> DataFrame:
@@ -1203,27 +1046,18 @@ def detect_scene_cuts(media: DataFrame, threshold: float = 30.0) -> DataFrame:
     training-data pipeline (keyframe selection / shot segmentation)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, fps = decode_y4m(bytes(r["payload"]))
-                if frames.shape[0] < 2:
-                    continue
-                y = frames[:, :, :, 0].astype("float64")
-                deltas = np.abs(y[1:] - y[:-1]).mean(axis=(1, 2))
-                for i, d in enumerate(deltas, start=1):
-                    if d > threshold:
-                        rows.append(
-                            (r["media_id"], i, int(i / fps * 1000), float(d))
-                        )
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "t_ms", "luma_delta"]
-            )
+    def cuts(payload):
+        frames, fps = decode_y4m(bytes(payload))
+        if frames.shape[0] < 2:
+            return
+        y = frames[:, :, :, 0].astype("float64")
+        deltas = np.abs(y[1:] - y[:-1]).mean(axis=(1, 2))
+        for i, d in enumerate(deltas, start=1):
+            if d > threshold:
+                yield i, int(i / fps * 1000), float(d)
 
-    return media.filter(F.col("mime") == "video/x-yuv4mpeg").mapInPandas(
-        batches, SCENE_CUT_SCHEMA
-    )
+    return _per_clip(media, F.col("mime") == "video/x-yuv4mpeg",
+                     SCENE_CUT_SCHEMA, cuts)
 
 
 def synthetic_y4m_media(spark, n: int = 8) -> DataFrame:
@@ -1300,22 +1134,9 @@ def dhash_array(arr) -> int:
 
 def image_dhash(media: DataFrame) -> DataFrame:
     """(media_id, dhash) for every image payload, decoded with the
-    real sniffing codec path — same Arrow-batched mapInPandas flow."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "dhash": pdf["payload"]
-                    .map(lambda b: dhash_array(decode_image(b)))
-                    .astype("int64"),
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, DHASH_SCHEMA
-    )
+    real sniffing codec path."""
+    return _per_clip(media, F.col("kind") == "image", DHASH_SCHEMA,
+                     lambda p: [(dhash_array(decode_image(p)),)])
 
 
 def image_near_dups(media: DataFrame, max_hamming: int = 6) -> DataFrame:
@@ -1378,6 +1199,20 @@ VAD_SCHEMA = StructType(
 )
 
 
+def _active_runs(active):
+    """(start, end) index pairs of every maximal run of True in the
+    boolean array ``active`` — the run-length scan both voice-activity
+    detectors share."""
+    start = None
+    for i in range(len(active) + 1):
+        on = i < len(active) and active[i]
+        if on and start is None:
+            start = i
+        elif not on and start is not None:
+            yield start, i
+            start = None
+
+
 def detect_voice_activity(
     media: DataFrame, frame_ms: int = 20, threshold_ratio: float = 0.5
 ) -> DataFrame:
@@ -1385,129 +1220,35 @@ def detect_voice_activity(
     ``frame_ms`` whose RMS exceeds ``threshold_ratio`` x the clip's
     overall RMS are active; consecutive active frames merge into
     (start_ms, end_ms) segments — the first curation step of a speech
-    training pipeline (trim silence, measure speech density).  Pure
-    numpy per clip, same Arrow-batched mapInPandas flow."""
+    training pipeline (trim silence, measure speech density)."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                a, rate = decode_wav(bytes(r["payload"]))
-                mono = a.mean(axis=1)
-                spf = max(int(rate * frame_ms / 1000), 1)
-                n_frames = len(mono) // spf
-                if n_frames == 0:
-                    continue
-                frames = mono[: n_frames * spf].reshape(n_frames, spf)
-                rms = np.sqrt((frames.astype(np.float64) ** 2).mean(axis=1))
-                overall = float(np.sqrt((mono.astype(np.float64) ** 2).mean()))
-                active = rms > threshold_ratio * overall
-                start = None
-                for i in range(n_frames + 1):
-                    on = i < n_frames and active[i]
-                    if on and start is None:
-                        start = i
-                    elif not on and start is not None:
-                        seg = rms[start:i]
-                        rows.append(
-                            (
-                                r["media_id"],
-                                int(start * frame_ms),
-                                int(i * frame_ms),
-                                float(seg.mean()),
-                            )
-                        )
-                        start = None
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "seg_start_ms", "seg_end_ms", "mean_rms"],
+    def segments(payload):
+        a, rate = decode_wav(bytes(payload))
+        mono = a.mean(axis=1)
+        spf = max(int(rate * frame_ms / 1000), 1)
+        n_frames = len(mono) // spf
+        if n_frames == 0:
+            return
+        frames = mono[: n_frames * spf].reshape(n_frames, spf)
+        rms = np.sqrt((frames.astype(np.float64) ** 2).mean(axis=1))
+        overall = float(np.sqrt((mono.astype(np.float64) ** 2).mean()))
+        for start, end in _active_runs(rms > threshold_ratio * overall):
+            yield (
+                int(start * frame_ms), int(end * frame_ms),
+                float(rms[start:end].mean()),
             )
 
-    return media.filter(F.col("mime") == "audio/wav").mapInPandas(
-        batches, VAD_SCHEMA
-    )
-
-
-def resize_images_real(
-    media: DataFrame, width: int = 64, height: int = 64
-) -> DataFrame:
-    """Format-generic REAL resize: sniff + decode with the matching
-    codec, nearest-neighbor resample, re-encode in the SAME format
-    (PPM/PNG/BMP lossless; JPEG at q=85).  `resize_images` is the
-    default name for this path; this name is kept as a compatibility
-    alias."""
-    import numpy as np
-
-    def rz_payload(b: bytes) -> bytes:
-        a = decode_image(b)
-        h, w = a.shape[:2]
-        yi = np.minimum((np.arange(height) * h) // height, h - 1)
-        xi = np.minimum((np.arange(width) * w) // width, w - 1)
-        out = a[yi][:, xi]
-        raw = bytes(b)
-        if raw.startswith(_PNG_SIG):
-            return encode_png(out)
-        if raw.startswith(b"P6"):
-            return encode_ppm(out)
-        if raw.startswith(b"BM"):
-            return encode_bmp(out)
-        from sparkplans.operators.jpeg import encode_jpeg
-
-        return encode_jpeg(out[:, :, :3], quality=85)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "width": width,
-                    "height": height,
-                    "payload": pdf["payload"].map(rz_payload),
-                }
-            )
-
-    return media.filter(F.col("kind") == "image").mapInPandas(
-        batches, RESIZED_SCHEMA
-    )
+    return _per_clip(media, F.col("mime") == "audio/wav", VAD_SCHEMA, segments)
 
 
 def sample_gif_frames(media: DataFrame, every_ms: int = 100) -> DataFrame:
     """REAL frame sampling for animated GIF payloads (image/gif):
     frames composite per the stream's own delays; one output row per
     every_ms tick with the luma stats of the frame active at that
-    time — web-media animation handled by the same schema as the Y4M
-    video branch."""
-    import numpy as np
-
-    from sparkplans.operators.gif import decode_gif
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, delays = decode_gif(bytes(r["payload"]))
-                total = sum(delays)
-                starts = np.cumsum([0] + delays[:-1])
-                t = 0
-                while t < total:
-                    idx = int(np.searchsorted(starts, t, side="right") - 1)
-                    y = (
-                        0.299 * frames[idx, :, :, 0]
-                        + 0.587 * frames[idx, :, :, 1]
-                        + 0.114 * frames[idx, :, :, 2]
-                    )
-                    rows.append(
-                        (r["media_id"], idx, int(t), float(y.mean()), float(y.std()))
-                    )
-                    t += every_ms
-            yield pd.DataFrame(
-                rows, columns=["media_id", "frame_idx", "t_ms", "luma_mean", "luma_std"]
-            )
-
-    return media.filter(F.col("mime") == "image/gif").mapInPandas(
-        batches, Y4M_FRAME_SCHEMA
-    )
+    time, in the schema of :func:`sample_y4m_frames`."""
+    return _per_clip(media, F.col("mime") == "image/gif",
+                     Y4M_FRAME_SCHEMA, lambda p: _gif_samples(p, every_ms))
 
 
 MEDIA_METADATA_SCHEMA = StructType(
@@ -1525,40 +1266,26 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
     bitstreams stay stubbed (H.264-in-MP4, MP3): REAL box/frame-header
     parsers (`operators/mediaprobe`) pull duration, codec fourccs,
     bitrate and sample rate — the filter/route/gate metadata a media
-    pipeline needs even without decoding a single frame.  Same
-    Arrow-batched mapInPandas flow as the codec branches."""
+    pipeline needs even without decoding a single frame."""
     from sparkplans.operators import mediaprobe
 
-    def probe_one(b: bytes) -> tuple:
+    def probe(b):
         raw = bytes(b or b"")
         if len(raw) > 8 and raw[4:8] == b"ftyp":
             m = mediaprobe.probe_mp4(raw)
             detail = ",".join(
                 f"{t['handler']}:{t['codec']}" for t in m["tracks"]
             )
-            return "mp4", m["duration_ms"], detail
+            return [("mp4", m["duration_ms"], detail)]
         m = mediaprobe.probe_mp3(raw)
-        return (
+        return [(
             "mp3",
             m["est_duration_ms"],
             f"{m['bitrate_kbps']}kbps:{m['sample_rate']}Hz:{m['channel_mode']}",
-        )
+        )]
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            probed = pdf["payload"].map(probe_one)
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "container": probed.map(lambda t: t[0]),
-                    "duration_ms": probed.map(lambda t: t[1]).astype("int64"),
-                    "detail": probed.map(lambda t: t[2]),
-                }
-            )
-
-    return media.filter(
-        F.col("mime").isin("video/mp4", "audio/mpeg")
-    ).mapInPandas(batches, MEDIA_METADATA_SCHEMA)
+    return _per_clip(media, F.col("mime").isin("video/mp4", "audio/mpeg"),
+                     MEDIA_METADATA_SCHEMA, probe)
 
 
 # ---------------------------------------------------------------------
@@ -1569,7 +1296,7 @@ def extract_media_metadata(media: DataFrame) -> DataFrame:
 # spectrogram — (anchor frequency, target frequency, frame delta)
 # triples survive re-encoding, G.711 quantization, and level changes,
 # so near-identical recordings share many hashes.  Fingerprint
-# extraction is per-clip numpy in mapInPandas; MATCHING is a plain
+# extraction is per-clip numpy; MATCHING is a plain
 # hash equi-join + group count — JVM-side and shuffle-bounded by the
 # fingerprint table (rows ~ peaks x fanout, not samples).
 
@@ -1616,26 +1343,17 @@ def audio_fingerprints(
     peak pairs with peaks up to ``fanout_frames`` ahead; the hash
     packs (f_anchor, f_target, dt)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                peaks = _spectral_peaks(bytes(r["payload"]))
-                by_frame: dict[int, list[int]] = {}
-                for t, b in peaks:
-                    by_frame.setdefault(t, []).append(b)
-                for t, b in peaks:
-                    for dt in range(1, fanout_frames + 1):
-                        for b2 in by_frame.get(t + dt, ()):
-                            h = (b << 20) | (b2 << 8) | dt
-                            rows.append((r["media_id"], h, t))
-            yield pd.DataFrame(
-                rows, columns=["media_id", "fp_hash", "t_anchor"]
-            )
+    def landmarks(payload):
+        peaks = _spectral_peaks(bytes(payload))
+        by_frame: dict[int, list[int]] = {}
+        for t, b in peaks:
+            by_frame.setdefault(t, []).append(b)
+        for t, b in peaks:
+            for dt in range(1, fanout_frames + 1):
+                for b2 in by_frame.get(t + dt, ()):
+                    yield (b << 20) | (b2 << 8) | dt, t
 
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, AUDIO_FP_SCHEMA
-    )
+    return _per_clip(media, F.col("kind") == "audio", AUDIO_FP_SCHEMA, landmarks)
 
 
 def audio_near_dups(media: DataFrame, min_matches: int = 20) -> DataFrame:
@@ -1680,20 +1398,13 @@ def video_frame_dhashes(media: DataFrame) -> DataFrame:
     frame's luma plane — the video fingerprint table (8 bytes per
     frame, ~1/10^5 of raw clip bytes)."""
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, _fps = decode_y4m(bytes(r["payload"]))
-                for i in range(frames.shape[0]):
-                    rows.append(
-                        (r["media_id"], i, dhash_array(frames[i, :, :, 0]))
-                    )
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "dhash"])
+    def frame_hashes(payload):
+        frames, _fps = decode_y4m(bytes(payload))
+        for i in range(frames.shape[0]):
+            yield i, dhash_array(frames[i, :, :, 0])
 
-    return media.filter(F.col("mime") == "video/x-yuv4mpeg").mapInPandas(
-        batches, VIDEO_FP_SCHEMA
-    )
+    return _per_clip(media, F.col("mime") == "video/x-yuv4mpeg",
+                     VIDEO_FP_SCHEMA, frame_hashes)
 
 
 def video_near_dups(
@@ -1844,20 +1555,10 @@ MFCC_SCHEMA = StructType(
 def extract_mfcc(media: DataFrame) -> DataFrame:
     """MFCCs for every audio/wav row — the canonical learned-model
     audio feature (speech/music classifiers, audio dedup embeddings).
-    Same Arrow-batched mapInPandas flow as every codec branch; output
-    is 8 SCALAR columns (driver-hashable), one row per clip."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            feats = pdf["payload"].map(mfcc_row)
-            out = {"media_id": pdf["media_id"]}
-            for i in range(8):
-                out[f"mfcc_{i}"] = feats.map(lambda v, i=i: v[i])
-            yield pd.DataFrame(out)
-
-    return media.filter(F.col("mime") == "audio/wav").mapInPandas(
-        batches, MFCC_SCHEMA
-    )
+    Output is 8 SCALAR columns (driver-hashable), one row per
+    clip."""
+    return _per_clip(media, F.col("mime") == "audio/wav", MFCC_SCHEMA,
+                     lambda p: [tuple(mfcc_row(p))])
 
 
 SHOT_BOUNDARY_SCHEMA = StructType(
@@ -1879,32 +1580,22 @@ def detect_shot_boundaries(
     frames whose delta exceeds ``threshold`` as cut points.  One row
     per frame transition (frame_idx = the LATER frame).
 
-    Arrow-batched mapInPandas like every codec stage: per-partition
+    A per-clip stage like every codec stage: per-partition
     CPU, zero shuffles — at 100 TB this runs wherever the clip bytes
     already sit.  Histogram-based detectors drop in by swapping the
     delta expression; the plumbing (decode → pairwise frame walk →
     per-transition rows) is the invariant part."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                frames, _fps = decode_y4m(bytes(r["payload"]))
-                y = frames[:, :, :, 0].astype("float64")
-                for i in range(1, y.shape[0]):
-                    delta = float(np.abs(y[i] - y[i - 1]).mean())
-                    rows.append(
-                        (r["media_id"], i, delta, delta > threshold)
-                    )
-            yield pd.DataFrame(
-                rows,
-                columns=["media_id", "frame_idx", "luma_delta", "is_boundary"],
-            )
+    def transitions(payload):
+        frames, _fps = decode_y4m(bytes(payload))
+        y = frames[:, :, :, 0].astype("float64")
+        for i in range(1, y.shape[0]):
+            delta = float(np.abs(y[i] - y[i - 1]).mean())
+            yield i, delta, delta > threshold
 
-    return media.filter(F.col("mime") == "video/x-yuv4mpeg").mapInPandas(
-        batches, SHOT_BOUNDARY_SCHEMA
-    )
+    return _per_clip(media, F.col("mime") == "video/x-yuv4mpeg",
+                     SHOT_BOUNDARY_SCHEMA, transitions)
 
 
 VAD_SEGMENT_SCHEMA = StructType(
@@ -1930,42 +1621,15 @@ def detect_voice_segments(
     framing/run-length scan is the invariant part."""
     import numpy as np
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows = []
-            for _, r in pdf.iterrows():
-                samples, _rate = decode_wav(bytes(r["payload"]))
-                mono = samples[:, 0].astype("float64")
-                n_frames = len(mono) // frame_samples
-                if n_frames == 0:
-                    continue
-                framed = mono[: n_frames * frame_samples].reshape(
-                    n_frames, frame_samples
-                )
-                rms = np.sqrt((framed * framed).mean(axis=1))
-                active = rms > threshold
-                start = None
-                for i in range(n_frames + 1):
-                    on = i < n_frames and active[i]
-                    if on and start is None:
-                        start = i
-                    elif not on and start is not None:
-                        rows.append(
-                            (
-                                r["media_id"],
-                                start,
-                                i - start,
-                                float(rms[start:i].max()),
-                            )
-                        )
-                        start = None
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "media_id", "seg_start_frame", "seg_n_frames", "peak_rms",
-                ],
-            )
+    def segments(payload):
+        samples, _rate = decode_wav(bytes(payload))
+        mono = samples[:, 0].astype("float64")
+        n_frames = len(mono) // frame_samples
+        framed = mono[: n_frames * frame_samples].reshape(
+            n_frames, frame_samples
+        )
+        rms = np.sqrt((framed * framed).mean(axis=1))
+        for start, end in _active_runs(rms > threshold):
+            yield start, end - start, float(rms[start:end].max())
 
-    return media.filter(F.col("kind") == "audio").mapInPandas(
-        batches, VAD_SEGMENT_SCHEMA
-    )
+    return _per_clip(media, F.col("kind") == "audio", VAD_SEGMENT_SCHEMA, segments)

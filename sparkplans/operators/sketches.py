@@ -575,6 +575,14 @@ def tdigest_rollup(
     if not fine_cols:
         raise ValueError("tdigest_rollup requires non-empty fine_cols")
     coarse_names = list(coarse)
+    clash = set(coarse_names) & set(fine_cols)
+    if clash:
+        # withColumn would overwrite the fine key before the fold
+        # groups by it, silently yielding wrong digests
+        raise ValueError(
+            f"tdigest_rollup coarse key(s) {sorted(clash)} reuse "
+            "fine_cols names; give the coarse keys new names"
+        )
     _td_check_group_cols(fine_cols + coarse_names)
     part, fine_cols, _state_schema, _keyed = _td_partials(
         df, col, fine_cols, delta, chunk_rows

@@ -535,19 +535,69 @@ def test_image_features_plumbing(spark):
         )
 
 
-def test_image_features_arrow_twin_identical(spark):
-    """mapInArrow path produces bit-identical output to the
-    mapInPandas path (same kernel, no pandas conversion)."""
-    media = multimodal.synthetic_media(spark, n=30)
-    pd_rows = sorted(
-        multimodal.extract_image_features(media).collect(),
-        key=lambda r: r.media_id,
+# every public DataFrame -> DataFrame stage and its declared output:
+# a schema constant for the per-clip stages, the DDL of the plan for
+# the near-dup joins built on top of them
+_MEDIA_STAGES = {
+    "extract_image_features": "PPM_FEATURES_SCHEMA",
+    "decode_ppm_features": "PPM_FEATURES_SCHEMA",
+    "decode_png_features": "PPM_FEATURES_SCHEMA",
+    "resize_images": "RESIZED_SCHEMA",
+    "resize_ppm_images": "RESIZED_SCHEMA",
+    "resize_png_images": "RESIZED_SCHEMA",
+    "image_dhash": "DHASH_SCHEMA",
+    "decode_wav_features": "WAV_FEATURES_SCHEMA",
+    "resample_audio": "WAV_RESAMPLE_SCHEMA",
+    "detect_voice_activity": "VAD_SCHEMA",
+    "detect_voice_segments": "VAD_SEGMENT_SCHEMA",
+    "audio_fingerprints": "AUDIO_FP_SCHEMA",
+    "extract_mfcc": "MFCC_SCHEMA",
+    "sample_video_frames": "Y4M_FRAME_SCHEMA",
+    "sample_y4m_frames": "Y4M_FRAME_SCHEMA",
+    "sample_gif_frames": "Y4M_FRAME_SCHEMA",
+    "detect_scene_cuts": "SCENE_CUT_SCHEMA",
+    "detect_shot_boundaries": "SHOT_BOUNDARY_SCHEMA",
+    "video_frame_dhashes": "VIDEO_FP_SCHEMA",
+    "extract_media_metadata": "MEDIA_METADATA_SCHEMA",
+    "image_near_dups": "struct<id_a:bigint,id_b:bigint,hamming:int>",
+    "audio_near_dups": "struct<id_a:bigint,id_b:bigint,n_matches:bigint>",
+    "video_near_dups": "struct<id_a:bigint,id_b:bigint,n_matching_frames:bigint>",
+    "media_near_dups": "struct<kind:string,id_a:bigint,id_b:bigint,score:double>",
+}
+
+
+def test_media_stage_list_is_complete():
+    """_MEDIA_STAGES names every public (media: DataFrame) -> DataFrame
+    function of the module, so a new stage cannot skip the empty-input
+    test below."""
+    import inspect
+
+    public = {
+        name
+        for name, fn in inspect.getmembers(multimodal, inspect.isfunction)
+        if not name.startswith("_")
+        and fn.__module__ == multimodal.__name__
+        and list(inspect.signature(fn).parameters)[:1] == ["media"]
+        and inspect.signature(fn).return_annotation == "DataFrame"
+    }
+    assert public == set(_MEDIA_STAGES)
+
+
+@pytest.mark.parametrize("name", sorted(_MEDIA_STAGES))
+def test_media_stage_empty_input(spark, name):
+    """A media table whose rows no stage selects: every stage returns
+    zero rows under exactly its declared schema."""
+    media = spark.createDataFrame(
+        [(1, "text", "text/plain", b"hello", None, None, None)],
+        multimodal.MEDIA_SCHEMA,
     )
-    ar_rows = sorted(
-        multimodal.extract_image_features_arrow(media).collect(),
-        key=lambda r: r.media_id,
-    )
-    assert [r.asDict() for r in pd_rows] == [r.asDict() for r in ar_rows]
+    out = getattr(multimodal, name)(media)
+    declared = _MEDIA_STAGES[name]
+    if declared.startswith("struct<"):
+        assert out.schema.simpleString() == declared
+    else:
+        assert out.schema == getattr(multimodal, declared)
+    assert out.collect() == []
 
 
 def test_ppm_decode_roundtrip_and_real_features(spark):
@@ -1994,7 +2044,7 @@ def test_wav_resample_real_linear_interp(spark):
 
     media = multimodal.synthetic_wav_media(spark, n=6)
     out = {r.media_id: r
-           for r in multimodal.resample_wav_audio(media, target_hz=16000).collect()}
+           for r in multimodal.resample_audio(media, target_hz=16000).collect()}
     for row in media.collect():
         src, rate = multimodal.decode_wav(bytes(row.payload))
         got_arr, got_rate = multimodal.decode_wav(bytes(out[row.media_id].payload))
@@ -2091,7 +2141,7 @@ def test_bmp_roundtrip_and_generic_image_dispatch(spark):
         rows.append((i, "image", mime, enc(a), a.shape[1], a.shape[0], None))
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     feats = {r.media_id: r
-             for r in multimodal.extract_image_features_real(media).collect()}
+             for r in multimodal.extract_image_features(media).collect()}
     assert len(feats) == 9
     for i, a in arrays.items():
         got = feats[i]
@@ -2379,7 +2429,7 @@ def test_generic_image_dispatch_includes_jpeg(spark):
         rows.append((i, "image", mime, payload, w, h, None))
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     feats = {r.media_id: r
-             for r in multimodal.extract_image_features_real(media).collect()}
+             for r in multimodal.extract_image_features(media).collect()}
     assert len(feats) == 6
     for i, a in arrays.items():
         got = feats[i]
@@ -2549,7 +2599,7 @@ def test_jpeg_420_subsampling_roundtrip():
 
 
 def test_generic_resize_real_across_formats(spark):
-    """resize_images_real decodes with the sniffed codec, resamples
+    """resize_images decodes with the sniffed codec, resamples
     real pixels, and re-encodes in the same container: lossless
     formats round-trip to exactly the numpy nearest-neighbor result;
     JPEG output re-decodes close to it."""
@@ -2570,7 +2620,7 @@ def test_generic_resize_real_across_formats(spark):
     ]
     media = spark.createDataFrame(rows, multimodal.MEDIA_SCHEMA)
     out = {r.media_id: bytes(r.payload)
-           for r in multimodal.resize_images_real(media, width=8, height=8).collect()}
+           for r in multimodal.resize_images(media, width=8, height=8).collect()}
     yi = np.minimum((np.arange(8) * h) // 8, h - 1)
     xi = np.minimum((np.arange(8) * w) // 8, w - 1)
     want = img[yi][:, xi]

@@ -264,3 +264,22 @@ def test_rollup_fused_bit_identical(spark):
         )
 
     assert canon(fused) == canon(unfused)
+
+
+def test_rollup_rejects_coarse_key_reusing_fine_name(spark):
+    """A coarse key named like a fine key would overwrite that fine
+    column before the fold groups by it, so the digests would be
+    built over the wrong groups; tdigest_rollup rejects it at plan
+    time instead."""
+    import pytest
+
+    from sparkplans.operators.sketches import tdigest_rollup
+
+    df = _stream(spark, 1_000).select(
+        (F.col("id") % 97).cast("int").alias("day"), "x"
+    )
+    with pytest.raises(ValueError, match=r"\['day'\]"):
+        tdigest_rollup(
+            df, "x", fine_cols=["day"],
+            coarse={"day": (F.col("day") % 7).cast("int")}, delta=DELTA,
+        )
