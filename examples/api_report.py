@@ -22,6 +22,7 @@ MODULES = [
     "sparkplans.catalog",
     "sparkplans.ordering",
     "sparkplans.plans",
+    "sparkplans.record",
     "sparkplans.sinks",
     "sparkplans.table",
     "sparkplans.slt",

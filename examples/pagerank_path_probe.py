@@ -14,12 +14,12 @@ shuffle path on the SAME data by forcing ``pagerankBroadcastNodes=0``
 graphs run ~20M nodes, past any sane broadcast ceiling), previously
 exercised only by the toy-scale parity test.
 
-Per path it reports total wall, the operator's own decomposition
-(``graph.last_run_stats``: prologue vs per-iteration walls — the
-per-iteration number is the one that multiplies at scale), scheduler
-job count, and a cpu_par contention leg before/after (bench.py's
-calibration axis) so a noisy-neighbor burst is visible in the
-artifact instead of silently inflating a path.  ``--parity``
+Per path it reports the run record (``sparkplans.record``): build vs
+action wall, scheduler jobs with each job's submit/complete time (the
+per-iteration jobs are the ones that multiply at scale), executor
+run vs CPU time (their gap shows a noisy-neighbor burst instead of
+silently inflating a path), and the operator's own note (path taken,
+|V|, one iteration's live exchanges).  ``--parity``
 additionally joins the two paths' ranks and asserts max |Δ| <= 1e-9
 (route choice is a physical-plan decision; the fixed point must not
 move).  Prints one JSON line for SCALE.md.
@@ -30,16 +30,9 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, repo)
-
-
-def _cpu_par() -> float:
-    from bench import _cpu_calibration
-
-    return _cpu_calibration()[1]
 
 
 def main() -> int:
@@ -50,8 +43,8 @@ def main() -> int:
     if "--paths" in sys.argv:
         paths = sys.argv[sys.argv.index("--paths") + 1]
 
+    from sparkplans import record
     from sparkplans.session import EngineOptions, build_session
-    from sparkplans.operators import graph
     import sparkplans.queries as Q
 
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -76,49 +69,23 @@ def main() -> int:
         app_name="pagerank-path-probe",
         master=f"local[{cpus}]",
     )
-    sc = spark.sparkContext
-
-    def jobs() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
     fn = Q.REGISTRY["pagerank_copurchase"].fn
     out: dict = {"sf_dir": sf_dir, "cpus": cpus, "paths": {}}
     results: dict = {}
 
-    legs = (
-        ["broadcast", "shuffle"]
-        if paths == "both"
-        else [paths]
-    )
-    for leg in legs:
+    for leg in ["broadcast", "shuffle"] if paths == "both" else [paths]:
         if leg == "shuffle":
             spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", "0")
         else:
-            try:
-                spark.conf.unset("spark.sparkplans.pagerankBroadcastNodes")
-            except Exception:
-                pass
-        par_open = _cpu_par()
-        j0 = jobs()
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        wall = round(time.perf_counter() - t0, 1)
-        j_used = jobs() - j0
-        par_close = _cpu_par()
-        stats = dict(graph.last_run_stats or {})
-        iters = stats.get("iteration_secs", [])
-        out["paths"][leg] = {
-            "wall_sec": wall,
-            "jobs": j_used,
-            "cpu_par_open_sec": par_open,
-            "cpu_par_close_sec": par_close,
-            **stats,
-            "iter_avg_sec": round(sum(iters) / len(iters), 3) if iters else None,
-        }
+            spark.conf.unset("spark.sparkplans.pagerankBroadcastNodes")
+        with record.run(spark, f"pagerank_{leg}") as rec:
+            df = fn(spark, sf_dir)
+            with record.action():
+                df.write.format("noop").mode("overwrite").save()
+        out["paths"][leg] = rec
         if parity:
             results[leg] = df
-        print(f"# {leg}: {wall}s, {j_used} jobs, {stats}", file=sys.stderr)
+        print(f"# {leg}: {record.summary(rec)}", file=sys.stderr)
 
     if parity and len(results) == 2:
         from pyspark.sql import functions as F
@@ -127,33 +94,22 @@ def main() -> int:
         row = (
             a.join(b, F.col("a.node") == F.col("b.node"), "full")
             .agg(
-                F.max(F.abs(F.col("a.rank") - F.col("b.rank"))).alias("max_d"),
-                F.count(
-                    F.when(
-                        F.col("a.node").isNull() | F.col("b.node").isNull(), 1
-                    )
-                ).alias("missing"),
+                F.coalesce(F.max(F.abs(F.col("a.rank") - F.col("b.rank"))), F.lit(0.0)),
+                F.count(F.when(F.col("a.node").isNull() | F.col("b.node").isNull(), 1)),
             )
             .collect()[0]
         )
-        # max_d is None on an empty/degenerate graph (both legs emit
-        # zero rows) — guard before float() so the probe fails with
-        # the intended message, not a TypeError; SystemExit instead
-        # of assert so the gates survive python -O
-        max_d = 0.0 if row["max_d"] is None else float(row["max_d"])
-        out["parity"] = {
-            "max_abs_diff": max_d,
-            "unmatched_nodes": int(row["missing"]),
-        }
-        if int(row["missing"]) != 0:
-            print(json.dumps(out))
-            raise SystemExit("PARITY FAIL: node sets diverge between paths")
-        if max_d > 1e-9:
-            print(json.dumps(out))
-            raise SystemExit(f"PARITY FAIL: rank daylight {max_d}")
+        # an empty graph has no max: coalesced to 0.0 above
+        out["parity"] = {"max_abs_diff": float(row[0]), "unmatched_nodes": int(row[1])}
 
     print(json.dumps(out))
     spark.stop()
+    # SystemExit, not assert, so the gates survive python -O
+    p = out.get("parity", {})
+    if p.get("unmatched_nodes"):
+        raise SystemExit("PARITY FAIL: node sets diverge between paths")
+    if p.get("max_abs_diff", 0.0) > 1e-9:
+        raise SystemExit(f"PARITY FAIL: rank daylight {p['max_abs_diff']}")
     return 0
 
 

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
-"""Per-query cost decomposition: wall (min-of-N via noop sink),
-scheduler-job count, and per-rep walls — the measure-first step of
-the optimization guide (§1). Job count × ~0.1 s driver overhead vs
-wall tells whether a query is compute-bound or driver-bound.
+"""Per-query cost decomposition: one run record per rep through a
+noop sink — the measure-first step of the optimization guide (§1).
+Job count × ~0.1 s driver overhead vs wall tells whether a query is
+compute-bound or driver-bound.
 
     python examples/query_profile.py <query> [query ...]
 """
@@ -11,16 +11,15 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from sparkplans import record  # noqa: E402
 from sparkplans.session import EngineOptions, build_session  # noqa: E402
 import sparkplans.queries as Q  # noqa: E402
 
 
 def main() -> None:
-    names = sys.argv[1:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     reps = int(os.environ.get("REPS", "3"))
@@ -29,30 +28,17 @@ def main() -> None:
         app_name="query-profile",
         master=f"local[{cpus}]",
     )
-    sc = spark.sparkContext
-
-    def next_job_id() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
     # warmup
     Q.REGISTRY["agg_count_star"].fn(spark, sf_dir).write.format("noop").mode(
         "overwrite"
     ).save()
-    for name in names:
-        fn = Q.REGISTRY[name].fn
-        walls = []
-        jobs = None
-        for r in range(reps):
-            j0 = next_job_id()
-            t0 = time.perf_counter()
-            sc.setJobDescription(f"profile:{name}")
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            walls.append(round(time.perf_counter() - t0, 3))
-            jobs = next_job_id() - j0
-        print(
-            f"{name}: min {min(walls):.3f}s walls={walls} jobs={jobs} "
-            f"(~{jobs * 0.1:.1f}s if driver-bound)"
-        )
+    for name in sys.argv[1:]:
+        for _ in range(reps):
+            with record.run(spark, name) as rec:
+                df = Q.REGISTRY[name].fn(spark, sf_dir)
+                with record.action():
+                    df.write.format("noop").mode("overwrite").save()
+            print(record.summary(rec))
     spark.stop()
 
 

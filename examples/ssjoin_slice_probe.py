@@ -29,7 +29,6 @@ import os
 import shutil
 import sys
 import tempfile
-import time
 
 repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, repo)
@@ -39,6 +38,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else ".localdata/sf100"
     threshold = float(sys.argv[2]) if len(sys.argv) > 2 else 0.5
 
+    from sparkplans import record
     from sparkplans.session import EngineOptions, build_session
     from sparkplans.operators import dedup
     from sparkplans.queries import _t_cpu
@@ -65,23 +65,27 @@ def main() -> int:
 
     scratch = tempfile.mkdtemp(prefix="ssjoin_probe_")
     try:
-        def bounded_run(hi: int) -> tuple[float, int]:
-            t0 = time.perf_counter()
-            part = dedup.prefix_filter_pairs(
-                docs,
-                threshold=threshold,
-                slices="auto",
-                slice_dir=scratch,
-                slice_range=(0, hi),
-            )
-            n_pairs = part.count()
-            return time.perf_counter() - t0, n_pairs
+        def bounded_run(hi: int) -> dict:
+            with record.run(spark, f"ssjoin_slices_0_{hi}") as rec:
+                part = dedup.prefix_filter_pairs(
+                    docs,
+                    threshold=threshold,
+                    slices="auto",
+                    slice_dir=scratch,
+                    slice_range=(0, hi),
+                )
+                with record.action():
+                    rec["pairs"] = part.count()
+            return rec
 
-        wall1, pairs1 = bounded_run(1)
-        decision = dict(dedup.last_auto_decision or {})
+        rec1 = bounded_run(1)
+        wall1 = rec1["wall_s"]
+        # candidate volume, K, what the budget wanted, and the per-slice
+        # scratch overage when the ssjoinMaxSlices cap bound
+        decision = rec1["notes"].get("prefix_filter_pairs", {})
         k = int(decision.get("slices", 1))
         if k > 2:
-            wall2, pairs2 = bounded_run(2)
+            wall2 = bounded_run(2)["wall_s"]
             marginal = max(wall2 - wall1, 0.1)
             prologue = max(wall1 - marginal, 0.0)
             extrapolated = prologue + k * marginal
@@ -95,17 +99,10 @@ def main() -> int:
                     "sf_dir": sf_dir,
                     "threshold": threshold,
                     "n_docs": n_docs,
-                    "raw_candidate_rows": decision.get("raw_candidate_rows"),
+                    **decision,
                     "auto_slices": k,
-                    "budget_bytes": decision.get("budget_bytes"),
-                    # budget honesty (round 8): what the budget WANTED,
-                    # whether the ssjoinMaxSlices cap bound, and the
-                    # projected per-slice scratch overage when it did
-                    "slices_wanted": decision.get("slices_wanted"),
-                    "cap_bound": decision.get("cap_bound"),
-                    "max_slices": decision.get("max_slices"),
-                    "budget_breach_bytes": decision.get("budget_breach_bytes"),
-                    "slice0_pairs": pairs1,
+                    "slice0_pairs": rec1["pairs"],
+                    "slice0_jobs": rec1["jobs"],
                     "wall_1slice_sec": round(wall1, 1),
                     "wall_2slice_sec": round(wall2, 1) if wall2 else None,
                     # prologue = shingle ranking + decision aggregation,

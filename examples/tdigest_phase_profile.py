@@ -23,10 +23,11 @@ the same data so the premium is attributed, not argued:
   should be ~ build_grouped + merge_week + audit; the phases share
   nothing but page cache).
 
-Prints ONE JSON line for SCALE.md.  Phase walls are single-shot on a
-cold-session (same protocol as engine_sweep's cold single-shot
-numbers); a cpu_par calibration leg brackets the run so host noise is
-visible in the artifact.
+Prints ONE JSON line for SCALE.md: each phase's run record
+(``sparkplans.record``: wall, jobs, executor run vs CPU time — their
+gap makes host noise visible in the artifact).  Phases are
+single-shot on a cold session (same protocol as engine_sweep's cold
+single-shot numbers).
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, repo)
@@ -44,7 +44,7 @@ def main() -> int:
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     sf_dir = args[0] if args else "/root/repo/.localdata/sf10"
 
-    from bench import _cpu_calibration
+    from sparkplans import record
     from sparkplans.session import EngineOptions, build_session
     from sparkplans.materialize import materialize
     from sparkplans.operators.sketches import (
@@ -80,30 +80,27 @@ def main() -> int:
 
     li = _t_cpu(spark, sf_dir, "lineitem")
     out: dict = {"sf_dir": sf_dir, "cpus": cpus, "phases": {}}
-    out["cpu_par_open_sec"] = _cpu_calibration()[1]
 
-    def noop(df) -> float:
-        t0 = time.perf_counter()
-        df.write.format("noop").mode("overwrite").save()
-        return round(time.perf_counter() - t0, 1)
+    def phase(name, build):
+        with record.run(spark, name) as rec:
+            df = build()
+            with record.action():
+                df.write.format("noop").mode("overwrite").save()
+        out["phases"][name] = rec
+        return df
 
-    src_ungrouped = li.select(F.col("l_extendedprice").alias("x"))
-    out["phases"]["build_ungrouped"] = noop(tdigest_build(src_ungrouped, "x"))
-
+    phase("build_ungrouped", lambda: tdigest_build(
+        li.select(F.col("l_extendedprice").alias("x")), "x"))
     day_src = li.select(
         F.col("l_shipdate").cast("date").alias("day"),
         F.date_trunc("week", F.col("l_shipdate")).cast("date").alias("week"),
         F.col("l_extendedprice").alias("x"),
     )
-    t0 = time.perf_counter()
-    dig_day = materialize(tdigest_build(day_src, "x", group_cols=["day", "week"]))
-    out["phases"]["build_grouped"] = round(time.perf_counter() - t0, 1)
-    out["n_day_digests"] = dig_day.count()
-
-    t0 = time.perf_counter()
-    dig_week = materialize(tdigest_merge(dig_day, group_cols=["week"]))
-    out["phases"]["merge_week"] = round(time.perf_counter() - t0, 1)
-    out["n_week_digests"] = dig_week.count()
+    dig_day = phase("build_grouped", lambda: materialize(
+        tdigest_build(day_src, "x", group_cols=["day", "week"])))
+    dig_week = phase("merge_week", lambda: materialize(
+        tdigest_merge(dig_day, group_cols=["week"])))
+    out["n_day_digests"], out["n_week_digests"] = dig_day.count(), dig_week.count()
 
     est = tdigest_quantiles(dig_week, [0.5]).select(
         "week", F.col("est").alias("med")
@@ -112,7 +109,7 @@ def main() -> int:
         F.date_trunc("week", F.col("l_shipdate")).cast("date").alias("week"),
         F.col("l_extendedprice").alias("x"),
     )
-    audited = (
+    phase("audit", lambda: (
         li_wk.join(F.broadcast(est), "week")
         .groupBy("week")
         .agg(
@@ -120,17 +117,12 @@ def main() -> int:
             F.sum(F.when(F.col("x") < F.col("med"), 1).otherwise(0)).alias("blo"),
             F.sum(F.when(F.col("x") <= F.col("med"), 1).otherwise(0)).alias("bhi"),
         )
-    )
-    out["phases"]["audit"] = noop(audited)
-
-    out["phases"]["full_query"] = noop(
-        Q.REGISTRY["tdigest_weekly_rollup"].fn(spark, sf_dir)
-    )
-    out["cpu_par_close_sec"] = _cpu_calibration()[1]
-    phases = out["phases"]
+    ))
+    phase("full_query", lambda: Q.REGISTRY["tdigest_weekly_rollup"].fn(spark, sf_dir))
+    walls = {k: r["wall_s"] for k, r in out["phases"].items()}
     out["grouped_over_ungrouped_build"] = (
-        round(phases["build_grouped"] / phases["build_ungrouped"], 2)
-        if phases["build_ungrouped"]
+        round(walls["build_grouped"] / walls["build_ungrouped"], 2)
+        if walls["build_ungrouped"]
         else None
     )
     print(json.dumps(out))

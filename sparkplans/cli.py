@@ -12,7 +12,7 @@ and everything Spark SQL accepts):
 - ``\\d``            — list registered tables (information_schema view)
 - ``\\d <table>``    — describe one table's columns
 - ``\\analyze <sql>`` — EXPLAIN ANALYZE: execute and show per-operator
-  runtime SQLMetrics (the reference's docs/3:69-80)
+  runtime SQLMetrics (the reference's docs/3:69-80) and the run record
 - ``\\timing``       — toggle per-query wall-clock reporting
 - ``\\q``            — quit
 
@@ -94,15 +94,20 @@ def _run_command_inner(engine, line, parts, cmd, out) -> bool:
         )
     elif cmd == "\\analyze":
         # the reference's EXPLAIN ANALYZE (docs/3:69-80): execute and
-        # show per-operator SQLMetrics
+        # show per-operator SQLMetrics, then the run record
         sql = line.strip()[len("\\analyze"):].strip().rstrip(";")
         if not sql:
             print("usage: \\analyze <sql>", file=out)
             return True
-        from sparkplans import plans as _plans
+        from sparkplans import plans as _plans, record
 
         try:
-            print(_plans.explain_analyze(engine.sql(sql)), file=out)
+            with record.run(engine.spark, "analyze") as rec:
+                df = engine.sql(sql)
+                with record.action():
+                    tree = _plans.explain_analyze(df)
+            print(tree, file=out)
+            print(record.summary(rec), file=out)
         except Exception as ex:
             first = str(ex).strip().splitlines()
             print(f"Error: {first[0] if first else ex}", file=out)

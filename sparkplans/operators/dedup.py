@@ -26,6 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation, Window, functions as F
 
+from sparkplans import record
 from sparkplans.functions.text import doc_fingerprint
 from sparkplans.materialize import materialize, observed, materialize_lazy
 
@@ -298,8 +299,6 @@ def connected_components(
     prev_sig = (int(row0["cnt"]), None if row0["hs"] is None else int(row0["hs"]))
 
     converged = False
-    global cc_last_round_plan
-    cc_last_round_plan = None
     for _round in range(max_iter):
         obs = Observation()
         round_df = _star(_star(edges, large=True), large=False).observe(
@@ -317,15 +316,7 @@ def connected_components(
             # round's live exchange count so a regression that adds
             # an avoidable exchange (e.g. losing ReuseExchange on the
             # adj scan) still fails loudly.
-            from sparkplans import plans as _plans
-
-            try:
-                cc_last_round_plan = {
-                    "exchanges": _plans.live_exchanges(round_df),
-                    "sorts": _plans.live_sorts(round_df),
-                }
-            except Exception:
-                pass
+            record.note_plan("connected_components", round_df)
         new = materialize(round_df)
         sig = observed(obs, ["cnt", "hs"])
         if sig is None:  # listener didn't fire: one explicit aggregate
@@ -491,17 +482,6 @@ def deduplicate(
         F.col("node").alias(id_col)
     )
     return df.join(F.broadcast(losers), id_col, "left_anti")
-
-
-# Last slices="auto" decision (diagnostics for scale harnesses; see
-# prefix_filter_pairs) — driver-only, overwritten per call.
-last_auto_decision: dict | None = None
-
-# First-round live plan shape of the last connected_components() run
-# ({"exchanges": [...], "sorts": [...]}, cached subtrees excluded) —
-# set early in the function body, read by the round-shape ratchet
-# test and SCALE.md.
-cc_last_round_plan: dict | None = None
 
 
 def prefix_filter_pairs(
@@ -745,19 +725,13 @@ def prefix_filter_pairs(
         )
         slices = min(max(cap, 1), wanted)
         breach = max(0, int(raw_ub) * 72 // max(int(slices), 1) - budget)
-        # diagnostic hook: scale harnesses read the measured decision
-        # (candidate volume, chosen K) without re-running the
-        # aggregation — module-level, driver-only, overwritten per call
-        global last_auto_decision
-        last_auto_decision = {
-            "raw_candidate_rows": int(raw_ub),
-            "slices": int(slices),
-            "slices_wanted": int(wanted),
-            "budget_bytes": budget,
-            "max_slices": cap,
-            "cap_bound": wanted > slices,
-            "budget_breach_bytes": int(breach),
-        }
+        # the measured decision (candidate volume, chosen K), so scale
+        # harnesses need not re-run the aggregation
+        record.note("prefix_filter_pairs", {
+            "raw_candidate_rows": int(raw_ub), "budget_bytes": budget,
+            "slices": int(slices), "slices_wanted": int(wanted), "max_slices": cap,
+            "cap_bound": wanted > slices, "budget_breach_bytes": int(breach),
+        })
         if wanted > slices:
             import warnings
 

@@ -15,21 +15,8 @@ join reuses the same partitioning.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
+from sparkplans import record
 from sparkplans.materialize import materialize, materialize_lazy, observed, release
-
-# Last pagerank() run decomposition (diagnostics for scale harnesses,
-# same pattern as dedup.last_auto_decision): which path ran
-# (broadcast/shuffle), graph size, and the driver-side wall split
-# between the prologue (edge derivation + layout + counts) and each
-# power iteration — the numbers SCALE.md's per-path comparison needs
-# without instrumenting the caller.  Module-level, driver-only,
-# overwritten per call; None until the first run completes.
-last_run_stats: dict | None = None
-
-# First-round live plan shape ({"exchanges": [...], "sorts": [...]},
-# cached subtrees excluded) of the last label_propagation() run —
-# the per-round corpus-exchange contract test reads it.
-lpa_last_round_plan: dict | None = None
 
 
 def pagerank(
@@ -111,12 +98,17 @@ def pagerank(
     is (long node, double rank) ~= 16 B/row + row overhead, so one
     broadcast is ~128-200 MiB serialized at the threshold.  Broadcast
     blocks from finished iterations are reclaimed by Spark's
-    ContextCleaner once the driver GCs the plan references — each
-    iteration here is eagerly materialized (localCheckpoint) and the
+    ContextCleaner once the driver GCs the plan references.  With
+    dangling nodes every iteration is eagerly materialized and the
     previous ``ranks`` local is rebound, so at most a couple of
-    iterations' blocks are live between GC cycles (<~0.5 GiB at the
-    default; executors additionally keep one block each).  Size the
-    threshold to your executor memory: on small-executor clusters set
+    iterations' broadcast blocks are live between GC cycles (<~0.5 GiB
+    at the default; executors additionally keep one block each).  On
+    the no-dangling lazy chain the superseded rank frames are NOT
+    released per iteration: their blocks stay cached until one sweep
+    after the loop, so the chain holds every iteration's |V|-row rank
+    frame at once (10 iterations x 8M nodes ~= 2 GiB of cache at the
+    threshold).  Size the threshold to your executor memory: on
+    small-executor clusters set
     ``spark.sparkplans.pagerankBroadcastNodes`` to ~1-2M (~30 MiB per
     broadcast); above the threshold the shuffle path costs one extra
     exchange per iteration but holds no |V|-row broadcast at all.
@@ -131,9 +123,9 @@ def pagerank(
       dangling branch + broadcast stage per iteration — fewer
       scheduler jobs per iteration, the dominant cost on a busy
       driver (per-job overhead ~0.1 s at sf0.1 on a loaded host).
-    * superseded rank frames are released as soon as the next
-      iteration materializes (slim |V|-row frames, but 10 iterations
-      × 8M nodes would otherwise hold ~2 GiB of dead cache).
+    * with dangling nodes, superseded rank frames are released as
+      soon as the next iteration materializes; on the no-dangling
+      lazy chain they are released together after the loop (above).
     """
     # The raw edge derivation (often the single most expensive stage
     # — the co-purchase self-join costs ~half the query) is consumed
@@ -147,13 +139,8 @@ def pagerank(
     # edge list to avoid that doubled corpus-cache pressure instead
     # (a second 180M-row checkpoint at sf10 GC-thrashed the run to
     # 452 s vs 217 s).  One derivation, one corpus-sized cache.
-    import time as _time
-
     from pyspark.sql import Window
 
-    global last_run_stats
-    last_run_stats = None  # a mid-run failure must not leave stale stats
-    t_start = _time.perf_counter()
     spark = edges.sparkSession
     parts = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     bcast_limit = int(
@@ -231,14 +218,7 @@ def pagerank(
         cnt_vals = (row["n"], row["nd"])
     n_total, n_dangling = int(cnt_vals[0]), int(cnt_vals[1])
     if n_total == 0:
-        last_run_stats = {
-            "path": "empty",
-            "n_nodes": 0,
-            "n_dangling": 0,
-            "broadcast_limit": bcast_limit,
-            "prologue_sec": round(_time.perf_counter() - t_start, 3),
-            "iteration_secs": [],
-        }
+        record.note("pagerank", {"path": "empty", "n_nodes": 0, "n_dangling": 0})
         out = nodes_deg.select("node").withColumn("rank", F.lit(0.0))
         # cache entries outlive the call unless released; the empty
         # frame recomputes trivially if ever re-read
@@ -282,13 +262,8 @@ def pagerank(
     # (round 10, guide §2.6).  Arithmetic is untouched: the rank
     # expression already folded dm=0.0 into the same literal.
     no_dangling = n_dangling == 0
-    prologue_sec = _time.perf_counter() - t_start
-    iteration_secs: list[float] = []
-    iter_exchanges: list[str] | None = None
-    iter_sorts: list[str] | None = None
     stale: list[DataFrame] = []
     for i in range(iterations):
-        t_iter = _time.perf_counter()
         rank_side = ranks.select("node", "rank")
         if use_bcast:
             rank_side = F.broadcast(rank_side)
@@ -312,18 +287,11 @@ def pagerank(
             )
         )
         if i == 0:
-            # record what one iteration EXECUTES (cached subtrees
-            # excluded) — the contract is: no corpus-side exchange or
-            # sort, ever; only the slim ranks shuffle (+ the dst
-            # partial-agg exchange on the shuffle path).  Free plan
-            # walk, no job; tests and SCALE.md pin it.
-            from sparkplans import plans as _plans
-
-            try:
-                iter_exchanges = _plans.live_exchanges(update)
-                iter_sorts = _plans.live_sorts(update)
-            except Exception:
-                pass
+            # what one iteration EXECUTES — the contract is: no
+            # corpus-side exchange or sort, ever; only the slim ranks
+            # shuffle (+ the dst partial-agg exchange on the shuffle
+            # path).  Tests and SCALE.md pin it.
+            record.note_plan("pagerank_iteration", update)
         if no_dangling:
             last = i == iterations - 1
             # last iteration EAGER: it executes the deferred chain
@@ -361,23 +329,15 @@ def pagerank(
                     F.coalesce(F.sum("rank"), F.lit(0.0))
                 ).collect()[0][0]
             release(prev)  # 10 iterations of dead |V|-row cache add up
-        iteration_secs.append(round(_time.perf_counter() - t_iter, 3))
     for prev in stale:
         release(prev)
-    last_run_stats = {
+    # no dangling mass => iterations chained as lazy cuts, executed by
+    # the last iteration's job
+    record.note("pagerank", {
         "path": "broadcast" if use_bcast else "shuffle",
-        "n_nodes": n_total,
-        "n_dangling": n_dangling,
-        "broadcast_limit": bcast_limit,
-        "prologue_sec": round(prologue_sec, 3),
-        "iteration_secs": iteration_secs,
-        "iteration_exchanges": iter_exchanges,
-        "iteration_sorts": iter_sorts,
-        # True => iterations chained as lazy cuts (no dangling mass to
-        # observe); per-iteration secs are then plan-build latency and
-        # the LAST entry carries the chain's execution
+        "n_nodes": n_total, "n_dangling": n_dangling, "broadcast_limit": bcast_limit,
         "iterations_lazy_chained": no_dangling,
-    }
+    })
     # the returned frame reads only the final ranks checkpoint; the
     # static persisted frames are dead weight past this point, and
     # CacheManager holds them until an explicit unpersist
@@ -453,8 +413,6 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .transform(materialize_lazy)
     )
-    global lpa_last_round_plan
-    lpa_last_round_plan = None
     for i in range(iterations):
         nbr = e.join(labels, e.b == labels.node).select(
             F.col("a").alias("node"), "label"
@@ -466,17 +424,9 @@ def label_propagation(
             .select("node", (-F.col("m.nl")).alias("label"))
         )
         if i == 0:
-            # what one round EXECUTES (cached subtrees excluded); the
-            # contract tests pin: no exchange/sort on the corpus key b
-            from sparkplans import plans as _plans
-
-            try:
-                lpa_last_round_plan = {
-                    "exchanges": _plans.live_exchanges(update),
-                    "sorts": _plans.live_sorts(update),
-                }
-            except Exception:
-                pass
+            # what one round EXECUTES; the contract tests pin: no
+            # exchange/sort on the corpus key b
+            record.note_plan("label_propagation", update)
         labels = (
             materialize(update)
             if i == iterations - 1

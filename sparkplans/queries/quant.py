@@ -1724,6 +1724,26 @@ def q_incremental_dedup_batch(spark, sf_dir):
     return clean.select("doc_id", "fingerprint")
 
 
+def _media_clips(spark, sf_dir, kind, mime, clip):
+    """One synthesized clip per document under ``MEDIA_SCHEMA``;
+    ``clip(doc_id) -> (payload, width, height, duration_ms)``."""
+    import pandas as pd
+
+    from sparkplans.operators import multimodal as mm
+
+    cols = [f.name for f in mm.MEDIA_SCHEMA.fields]
+
+    def make(it):
+        for pdf in it:
+            yield pd.DataFrame(
+                [(did, kind, mime, *clip(did)) for did in map(int, pdf["doc_id"])],
+                columns=cols,
+            )
+
+    docs = _t_cpu(spark, sf_dir, "documents").select("doc_id")
+    return docs.mapInPandas(make, mm.MEDIA_SCHEMA)
+
+
 @register(
     "multimodal_ppm_features",
     """
@@ -1755,35 +1775,14 @@ def q_multimodal_ppm_features(spark, sf_dir):
     shuffles until the (tiny) per-image aggregate — media pipelines
     are per-partition CPU, exactly how they run at 100 TB."""
     import numpy as np
-    import pandas as pd
 
     from sparkplans.operators import multimodal as mm
 
-    d = _t_cpu(spark, sf_dir, "documents").select("doc_id")
+    def clip(did):
+        px = ((did * 7 + np.arange(192) * 13) % 256).astype("uint8")
+        return mm.encode_ppm(px.reshape(8, 8, 3)), 8, 8, None
 
-    def make(it):
-        for pdf in it:
-            payloads = [
-                mm.encode_ppm(
-                    ((int(did) * 7 + np.arange(192) * 13) % 256)
-                    .astype("uint8")
-                    .reshape(8, 8, 3)
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "image",
-                    "mime": "image/x-portable-pixmap",
-                    "payload": payloads,
-                    "width": 8,
-                    "height": 8,
-                    "duration_ms": None,
-                }
-            )
-
-    media = d.mapInPandas(make, mm.MEDIA_SCHEMA)
+    media = _media_clips(spark, sf_dir, "image", "image/x-portable-pixmap", clip)
     feats = mm.decode_ppm_features(media)
     return feats.select(
         F.col("media_id").alias("doc_id"),
@@ -1819,35 +1818,14 @@ def q_multimodal_wav_features(spark, sf_dir):
     |v| <= 1000 sum exactly in doubles, so both engines compute the
     identical RMS bit-for-bit before the 6dp round."""
     import numpy as np
-    import pandas as pd
 
     from sparkplans.operators import multimodal as mm
 
-    d = _t_cpu(spark, sf_dir, "documents").select("doc_id")
+    def clip(did):
+        sig = (((did * 31 + np.arange(160) * 17) % 2001) - 1000).astype("<i2")
+        return mm.encode_wav(sig, 8000), None, None, 20
 
-    def make(it):
-        for pdf in it:
-            payloads = [
-                mm.encode_wav(
-                    (((int(did) * 31 + np.arange(160) * 17) % 2001) - 1000)
-                    .astype("<i2"),
-                    8000,
-                )
-                for did in pdf["doc_id"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "kind": "audio",
-                    "mime": "audio/wav",
-                    "payload": payloads,
-                    "width": None,
-                    "height": None,
-                    "duration_ms": 20,
-                }
-            )
-
-    media = d.mapInPandas(make, mm.MEDIA_SCHEMA)
+    media = _media_clips(spark, sf_dir, "audio", "audio/wav", clip)
     feats = mm.decode_wav_features(media)
     return feats.select(
         F.col("media_id").alias("doc_id"),
@@ -1880,32 +1858,19 @@ def q_multimodal_video_frames(spark, sf_dir):
     and luma mean, each predicted in closed form by the oracle.
     Decode, frame walk, and luma statistics all sit on the hash."""
     import numpy as np
-    import pandas as pd
 
     from sparkplans.operators import multimodal as mm
 
-    d = _t_cpu(spark, sf_dir, "documents").select("doc_id")
+    def clip(did):
+        n = 4 + did % 3
+        frames = np.zeros((n, 8, 8, 3), dtype="uint8")
+        for f in range(n):
+            frames[f, :, :, 0] = (did * 5 + f * 11) % 256
+            frames[f, :, :, 1] = 128
+            frames[f, :, :, 2] = 128
+        return mm.encode_y4m(frames, 10, 1), 8, 8, n * 100
 
-    def make(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                n = 4 + did % 3
-                frames = np.zeros((n, 8, 8, 3), dtype="uint8")
-                for f in range(n):
-                    frames[f, :, :, 0] = (did * 5 + f * 11) % 256
-                    frames[f, :, :, 1] = 128
-                    frames[f, :, :, 2] = 128
-                rows.append(
-                    (did, "video", "video/x-yuv4mpeg",
-                     mm.encode_y4m(frames, 10, 1), 8, 8, n * 100)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in mm.MEDIA_SCHEMA.fields]
-            )
-
-    media = d.mapInPandas(make, mm.MEDIA_SCHEMA)
+    media = _media_clips(spark, sf_dir, "video", "video/x-yuv4mpeg", clip)
     frames = mm.sample_y4m_frames(media, every_ms=100)
     return frames.select(
         F.col("media_id").alias("doc_id"),
@@ -2545,34 +2510,21 @@ def q_video_shot_boundaries(spark, sf_dir):
     in encode, decode, the pairwise frame walk, or the thresholding
     breaks the hash."""
     import numpy as np
-    import pandas as pd
 
     from sparkplans.operators import multimodal as mm
 
-    d = _t_cpu(spark, sf_dir, "documents").select("doc_id")
+    def clip(did):
+        k = 1 + did % 4
+        a = did * 7 % 200
+        delta = 20 + did % 30
+        frames = np.zeros((6, 8, 8, 3), dtype="uint8")
+        frames[:, :, :, 1] = 128
+        frames[:, :, :, 2] = 128
+        frames[:k, :, :, 0] = a
+        frames[k:, :, :, 0] = a + delta
+        return mm.encode_y4m(frames, 10, 1), 8, 8, 600
 
-    def make(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                k = 1 + did % 4
-                a = did * 7 % 200
-                delta = 20 + did % 30
-                frames = np.zeros((6, 8, 8, 3), dtype="uint8")
-                frames[:, :, :, 1] = 128
-                frames[:, :, :, 2] = 128
-                frames[:k, :, :, 0] = a
-                frames[k:, :, :, 0] = a + delta
-                rows.append(
-                    (did, "video", "video/x-yuv4mpeg",
-                     mm.encode_y4m(frames, 10, 1), 8, 8, 600)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in mm.MEDIA_SCHEMA.fields]
-            )
-
-    media = d.mapInPandas(make, mm.MEDIA_SCHEMA)
+    media = _media_clips(spark, sf_dir, "video", "video/x-yuv4mpeg", clip)
     cuts = mm.detect_shot_boundaries(media, threshold=10.0)
     return cuts.filter(F.col("is_boundary")).select(
         F.col("media_id").alias("doc_id"),
@@ -2603,33 +2555,20 @@ def q_audio_vad_segments(spark, sf_dir):
     square-wave RMS is amp, exact in binary) — all predicted in
     closed form by the oracle."""
     import numpy as np
-    import pandas as pd
 
     from sparkplans.operators import multimodal as mm
 
     FR = 16
-    d = _t_cpu(spark, sf_dir, "documents").select("doc_id")
 
-    def make(it):
-        for pdf in it:
-            rows = []
-            for did in pdf["doc_id"]:
-                did = int(did)
-                a = 2 + did % 3
-                n = 3 + did % 2
-                amp = 500 + did % 100
-                sig = np.zeros(160, dtype="<i2")
-                tone = np.tile([amp, -amp], FR // 2 * n)[: n * FR]
-                sig[a * FR : (a + n) * FR] = tone
-                rows.append(
-                    (did, "audio", "audio/wav",
-                     mm.encode_wav(sig, 8000), None, None, 20)
-                )
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in mm.MEDIA_SCHEMA.fields]
-            )
+    def clip(did):
+        a = 2 + did % 3
+        n = 3 + did % 2
+        amp = 500 + did % 100
+        sig = np.zeros(160, dtype="<i2")
+        sig[a * FR : (a + n) * FR] = np.tile([amp, -amp], FR // 2 * n)[: n * FR]
+        return mm.encode_wav(sig, 8000), None, None, 20
 
-    media = d.mapInPandas(make, mm.MEDIA_SCHEMA)
+    media = _media_clips(spark, sf_dir, "audio", "audio/wav", clip)
     segs = mm.detect_voice_segments(media, frame_samples=FR, threshold=100.0)
     return segs.select(
         F.col("media_id").alias("doc_id"),

@@ -3,13 +3,13 @@
 The reference exposes configuration as first-class queryable state
 (``docs/1_cli_information_schema.md:69-127``: ``SET key=value``,
 ``information_schema.df_settings``) and steers physical plans through
-knobs like ``target_partitions``, ``repartition_joins``,
+knobs like ``target_partitions``, ``repartition_file_scans``,
 ``prefer_existing_sort`` (``tests/opt_parallel_execution.rs:17-23``).
 
-Spark equivalents are set here once, at session build time, plus a
-small dict of *engine-level* flags that our own planning layer (not
-Catalyst) consults — e.g. ``prefer_existing_sort`` drives sort
-elision in :mod:`sparkplans.engine`.
+Spark equivalents are set here once, at session build time, plus one
+*engine-level* flag that our own planning layer (not Catalyst)
+consults: ``prefer_existing_sort`` drives sort elision in
+:mod:`sparkplans.engine`.
 
 Scale note: these defaults are written for a real cluster.  AQE is on
 (runtime re-planning, skew-join splitting, partition coalescing),
@@ -21,8 +21,7 @@ automatically.  Tests run the same code on ``local[N]``.
 from __future__ import annotations
 
 import os
-from dataclasses import dataclass, field, asdict
-from typing import Any
+from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 
@@ -47,8 +46,6 @@ class EngineOptions:
     ``target_partitions``          ``spark.sql.shuffle.partitions`` +
                                    ``spark.default.parallelism``
     ``batch_size``                 ``spark.sql.parquet.columnarReaderBatchSize``
-    ``repartition_joins``          engine flag (join planning) + AQE
-    ``repartition_aggregations``   engine flag + AQE coalescing
     ``repartition_file_scans``     ``spark.sql.files.maxPartitionBytes``
                                    split behaviour (off -> huge split)
     ``prefer_existing_sort``       engine flag: sort-elision layer
@@ -58,8 +55,6 @@ class EngineOptions:
 
     target_partitions: int = field(default_factory=_default_parallelism)
     batch_size: int = 8192
-    repartition_joins: bool = True
-    repartition_aggregations: bool = True
     repartition_file_scans: bool = True
     prefer_existing_sort: bool = True
     collect_statistics: bool = True
@@ -125,13 +120,6 @@ class EngineOptions:
             conf["spark.sql.files.openCostInBytes"] = str(1 << 40)
         conf.update(self.extra_conf)
         return conf
-
-    def engine_flags(self) -> dict[str, Any]:
-        return {
-            "prefer_existing_sort": self.prefer_existing_sort,
-            "repartition_joins": self.repartition_joins,
-            "repartition_aggregations": self.repartition_aggregations,
-        }
 
 
 def configure_session(spark: SparkSession, options: EngineOptions | None = None) -> SparkSession:

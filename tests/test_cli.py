@@ -3,6 +3,7 @@ datafusion-cli transcript) — pipe a session through it and pin the
 box-table output, catalog commands, SET, timing, and error recovery."""
 
 import os
+import re
 import subprocess
 import sys
 
@@ -47,6 +48,7 @@ def test_cli_session_end_to_end():
     assert "Error:" in out              # bad query reported...
     assert "| still_alive |" in out     # ...and the session survived
     assert "numOutputRows=" in out      # \analyze shows SQLMetrics
+    assert re.search(r"record analyze: .*jobs=[1-9]\d*, stages=[1-9]\d*, tasks=[1-9]", out)
 
 
 def test_run_sql_limits_driver_collect(spark):

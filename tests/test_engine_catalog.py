@@ -9,6 +9,27 @@ from sparkplans.engine import Engine
 from tests.fixtures import DIM_ROWS, write_dimension, write_dimension_csv, write_fact2
 
 
+def test_every_engine_option_reaches_spark_conf():
+    """Flipping any EngineOptions field changes to_spark_conf(), except
+    prefer_existing_sort (read by the engine's sort elision) and the
+    extra_conf pass-through: a knob nothing reads is a silent no-op."""
+    import dataclasses
+
+    from sparkplans.session import EngineOptions
+
+    base = EngineOptions()
+    dead = []
+    for f in dataclasses.fields(base):
+        v = getattr(base, f.name)
+        flipped = (not v) if isinstance(v, bool) else v + 1 if isinstance(v, int) else f"{v}_x"
+        opts = EngineOptions(**{f.name: flipped})
+        if f.name not in ("prefer_existing_sort", "extra_conf") and (
+            opts.to_spark_conf() == base.to_spark_conf()
+        ):
+            dead.append(f.name)
+    assert dead == []
+
+
 @pytest.fixture(scope="module")
 def fixture_dirs(tmp_path_factory):
     base = tmp_path_factory.mktemp("reffix")

@@ -7,6 +7,7 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from sparkplans import record
 from sparkplans.operators import asof, bpe, dedup, multimodal, similarity, skew
 from sparkplans.sources import load_table
 from tests.conftest import SF_DIR
@@ -1657,14 +1658,13 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
 ):
     """When ssjoinMaxSlices clamps the auto slice count below what the
     ssjoinSliceBytes budget wants, the breach must be LOUD: a warning
-    fires and last_auto_decision records cap_bound + the projected
+    fires and the run record notes cap_bound + the projected
     per-slice scratch overage — on a real cluster with small
     executor-local disks a silent clamp is exactly the failure the
     budget knob exists to prevent."""
     import random
     import warnings
 
-    from sparkplans.operators import dedup
     from sparkplans.operators.dedup import prefix_filter_pairs
 
     rng = random.Random(13)
@@ -1682,7 +1682,7 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
     spark.conf.set("spark.sparkplans.ssjoinSliceBytes", "5000")
     spark.conf.set("spark.sparkplans.ssjoinMaxSlices", "2")
     try:
-        with warnings.catch_warnings(record=True) as caught:
+        with warnings.catch_warnings(record=True) as caught, record.run(spark, "cap") as rec:
             warnings.simplefilter("always")
             got = sorted(
                 (r.id_a, r.id_b, r.jaccard)
@@ -1692,7 +1692,7 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
                 ).collect()
             )
         assert got == want  # clamping never changes the result
-        d = dedup.last_auto_decision
+        d = rec["notes"]["prefix_filter_pairs"]
         assert d["cap_bound"] is True
         assert d["slices"] == 2 and d["slices_wanted"] > 2
         assert d["max_slices"] == 2
@@ -1706,7 +1706,7 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
         assert any("ssjoinMaxSlices" in m and "exceeds" in m for m in msgs), msgs
 
         # unclamped control on the same data: no breach recorded
-        with warnings.catch_warnings(record=True) as caught2:
+        with warnings.catch_warnings(record=True) as caught2, record.run(spark, "uncap") as rec2:
             warnings.simplefilter("always")
             spark.conf.unset("spark.sparkplans.ssjoinMaxSlices")
             got2 = sorted(
@@ -1717,7 +1717,7 @@ def test_prefix_filter_auto_slices_budget_honest_when_cap_binds(
                 ).collect()
             )
         assert got2 == want
-        d2 = dedup.last_auto_decision
+        d2 = rec2["notes"]["prefix_filter_pairs"]
         assert d2["cap_bound"] is False
         assert d2["budget_breach_bytes"] == 0
         assert not any("ssjoinMaxSlices" in str(w.message) for w in caught2)

@@ -6,7 +6,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import sparkplans.queries as Q
-from sparkplans import plans
+from sparkplans import plans, record
 from tests.conftest import SF_DIR
 
 
@@ -577,11 +577,11 @@ def test_pagerank_iteration_no_corpus_exchange_or_sort(spark):
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", "0")
     try:
-        graph.pagerank(edges, iterations=2).count()
-        st = graph.last_run_stats
-        assert st["path"] == "shuffle"
-        exchanges, sorts = st["iteration_exchanges"], st["iteration_sorts"]
-        assert exchanges is not None and sorts is not None
+        with record.run(spark, "pagerank") as rec:
+            graph.pagerank(edges, iterations=2).count()
+        assert rec["notes"]["pagerank"]["path"] == "shuffle"
+        shape = rec["notes"]["pagerank_iteration"]
+        exchanges, sorts = shape["exchanges"], shape["sorts"]
         # the corpus key must appear in NO live exchange or sort
         offenders = [d for d in exchanges + sorts if "src#" in d]
         assert not offenders, offenders
@@ -596,10 +596,11 @@ def test_pagerank_iteration_no_corpus_exchange_or_sort(spark):
     # broadcast path: zero live exchanges per iteration (the docstring
     # claim, now actually true — localCheckpoint used to erase the
     # layout and re-exchange the partial-agg rows every pass)
-    graph.pagerank(edges, iterations=2).count()
-    st = graph.last_run_stats
-    assert st["path"] == "broadcast"
-    assert st["iteration_exchanges"] == [], st["iteration_exchanges"]
+    with record.run(spark, "pagerank") as rec:
+        graph.pagerank(edges, iterations=2).count()
+    assert rec["notes"]["pagerank"]["path"] == "broadcast"
+    exchanges = rec["notes"]["pagerank_iteration"]["exchanges"]
+    assert exchanges == [], exchanges
 
 
 def test_label_propagation_round_no_corpus_exchange(spark):
@@ -617,11 +618,11 @@ def test_label_propagation_round_no_corpus_exchange(spark):
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        graph.label_propagation(edges, iterations=2).count()
+        with record.run(spark, "label_propagation") as rec:
+            graph.label_propagation(edges, iterations=2).count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-    shape = graph.lpa_last_round_plan
-    assert shape is not None
+    shape = rec["notes"]["label_propagation"]
     offenders = [d for d in shape["exchanges"] + shape["sorts"] if "b#" in d]
     assert not offenders, offenders
     assert len(shape["exchanges"]) <= 3, shape["exchanges"]
@@ -648,11 +649,11 @@ def test_connected_components_round_shape_ratchet(spark):
     prev_bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        dedup.connected_components(pairs).count()
+        with record.run(spark, "connected_components") as rec:
+            dedup.connected_components(pairs).count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev_bc)
-    shape = dedup.cc_last_round_plan
-    assert shape is not None
+    shape = rec["notes"]["connected_components"]
     # measured 22 static exchanges / 14 sorts on Spark 4.1.2 (inner
     # star referenced 4x; runtime collapses the copies via
     # ReusedExchange) — lowering is an optimization, raising must be

@@ -170,14 +170,14 @@ def test_engine_options_carry_the_flag():
     assert RELIABLE_FLAG not in EngineOptions().to_spark_conf()
 
 
-def test_observed_timeout_is_loud():
+def test_observed_timeout_is_loud(spark):
     """An observed() timeout means the caller silently burns the poll
-    window plus a fallback job — the first one must warn and every one
-    must count, so a Spark route that stops firing the listener shows
-    up in bench output instead of as an invisible per-iteration 5 s."""
+    window plus a fallback job — every one must warn and count in the
+    run record, so a Spark route that stops firing the listener shows
+    up in the record instead of as an invisible per-iteration 5 s."""
     import warnings
 
-    from sparkplans import materialize as M
+    from sparkplans import materialize as M, record
 
     class _EmptyMetrics:
         def isEmpty(self):
@@ -189,16 +189,10 @@ def test_observed_timeout_is_loud():
             def getOrEmpty():
                 return _EmptyMetrics()
 
-    before = M.observed_timeouts
-    M.observed_timeouts = 0
-    try:
-        with warnings.catch_warnings(record=True) as caught:
-            warnings.simplefilter("always")
-            assert M.observed(_FakeObs(), ["x"], timeout_s=0.02) is None
-            assert M.observed(_FakeObs(), ["x"], timeout_s=0.02) is None
-        assert M.observed_timeouts == 2
-        msgs = [str(w.message) for w in caught]
-        # first timeout warns, second stays quiet (counter only)
-        assert len([m for m in msgs if "Observation metrics" in m]) == 1
-    finally:
-        M.observed_timeouts = before
+    with warnings.catch_warnings(record=True) as caught, record.run(spark, "timeouts") as rec:
+        warnings.simplefilter("always")
+        assert M.observed(_FakeObs(), ["x"], timeout_s=0.02) is None
+        assert M.observed(_FakeObs(), ["x"], timeout_s=0.02) is None
+    assert rec["notes"]["observe_timeouts"] == 2
+    msgs = [str(w.message) for w in caught]
+    assert len([m for m in msgs if "Observation metrics" in m]) == 2

@@ -13,6 +13,7 @@ import time
 import pytest
 
 import sparkplans.queries as Q
+from sparkplans import record
 from tests.conftest import SF_DIR
 
 CEILING_S = 10.0
@@ -62,20 +63,11 @@ JOB_BUDGETS = {
 
 @pytest.mark.parametrize("name", sorted(JOB_BUDGETS))
 def test_scheduler_job_budget(spark, name):
-    sc = spark.sparkContext
-
-    def next_job_id() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
     # warm run: AQE stage stats / codegen caches can change job counts
-    Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    before = next_job_id()
-    Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    used = next_job_id() - before
+    Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    with record.run(spark, name) as rec:
+        Q.REGISTRY[name].fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+    used = rec["jobs"]
     assert used <= JOB_BUDGETS[name], (
         f"{name}: {used} scheduler jobs > budget {JOB_BUDGETS[name]} — "
         "a new per-iteration action/branch snuck in (driver collect, "
@@ -89,27 +81,21 @@ def test_scheduler_job_budget_pagerank_shuffle_path(spark):
     legitimately pays the one-time src re-layout plus a ranks-side
     shuffle per iteration over the broadcast shape (measured 52 at
     sf0.1 vs broadcast's 40), and nothing more."""
-    from sparkplans.operators import graph
-
-    sc = spark.sparkContext
-
-    def next_job_id() -> int:
-        return int(sc._jsc.sc().dagScheduler().nextJobId())
-
     from sparkplans import plans
 
     fn = Q.REGISTRY["pagerank_copurchase"].fn
     spark.conf.set("spark.sparkplans.pagerankBroadcastNodes", "0")
     try:
-        df = fn(spark, SF_DIR)
-        df.write.format("noop").mode("overwrite").save()
-        assert (graph.last_run_stats or {}).get("path") == "shuffle"
+        with record.run(spark, "warm") as warm:
+            df = fn(spark, SF_DIR)
+            df.write.format("noop").mode("overwrite").save()
+        assert warm["notes"]["pagerank"]["path"] == "shuffle"
         # static plan contract matches the broadcast shape: the
         # returned frame reads the final checkpoint, zero exchanges
         assert plans.num_exchanges(df) == 0
-        before = next_job_id()
-        fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        used = next_job_id() - before
+        with record.run(spark, "pagerank_copurchase") as rec:
+            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
+        used = rec["jobs"]
     finally:
         spark.conf.unset("spark.sparkplans.pagerankBroadcastNodes")
     assert used <= 34, (
